@@ -3,13 +3,13 @@
 Layers are the program's modules.  A layer a workload does not call
 reads 0 there (for example ``queries.*`` on ``daily_ingest``).  Values
 are per-op medians on ``daily_ingest`` (one daily cycle) and sums over
-one pass of the headline queries of per-query medians on
+one pass of the registry queries of per-query medians on
 ``registry_queries``.
 """
 
 from __future__ import annotations
 
-from workloads import HEADLINE
+from workloads import REGISTRY
 
 # name -> (unit, better)
 PER_LAYER: dict[str, tuple[str, str]] = {
@@ -63,7 +63,7 @@ PER_LAYER: dict[str, tuple[str, str]] = {
     "queries.task_s": ("s", "lower"),
     "queries.shuffle_mb": ("MB", "lower"),
     "queries.spill_mb": ("MB", "lower"),
-    **{f"queries.{q}.{k}": (u, "lower") for q in HEADLINE for k, u in (("s", "s"), ("jobs", "count"))},
+    **{f"queries.{q}.{k}": (u, "lower") for q in REGISTRY for k, u in (("s", "s"), ("jobs", "count"))},
     "host.calib_s": ("s", "lower"),
     "trace.op_p50_s": ("s", "lower"),
 }

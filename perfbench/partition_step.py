@@ -2,9 +2,10 @@
 crosses 32 date partitions (Spark's parallel partition-discovery
 threshold, ``spark.sql.sources.parallelPartitionDiscovery.threshold``).
 
-    python3 perfbench/partition_step.py --seed 1 --history 28 --days 8
+    python3 perfbench/partition_step.py
 
-Prints one JSON line per daily cycle: the date partitions in the zone
+Loads a 28-day history for seed 1, then runs 8 daily cycles, traced,
+and prints one JSON line per cycle: the date partitions in the zone
 before the cycle, and the cycle's ``plans.pipeline`` jobs, listing jobs
 and wall.  ``daily_ingest`` loads a history past the step so that its
 timed cycles all run at the levelled-off count.
@@ -12,20 +13,15 @@ timed cycles all run at the levelled-off count.
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
+SEED, HISTORY_DAYS, DAYS = 1, 28, 8
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--history", type=int, default=28)
-    ap.add_argument("--days", type=int, default=8)
-    args = ap.parse_args()
     sys.path[:0] = [HERE, os.getcwd()]
     from run import make_work, remove_work, start_spark, stop_spark
     from tracing import Tracer
@@ -37,12 +33,12 @@ def main() -> int:
     spark = start_spark(session, work)
     try:
         tracer = Tracer(spark)
-        wl = DailyIngest(spark, args.seed, work, tracer)
-        wl.HISTORY_DAYS, wl.WARMUP_DAYS = args.history, 0
+        wl = DailyIngest(spark, SEED, work, tracer)
+        wl.HISTORY_DAYS, wl.WARMUP_DAYS = HISTORY_DAYS, 0
         install_tracing(tracer, wl)
         wl.setup()
         parts = []
-        for i in range(args.days):
+        for i in range(DAYS):
             parts.append(sum("=" in e for e in os.listdir(os.path.join(wl.curated, "orders"))))
             wl.op(i)
         tracer.restore()

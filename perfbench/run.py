@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload daily_ingest --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload daily_ingest --seed 1 --seconds 20 --trace 0
 
 Run from the repository root.  Inputs are generated from ``--seed``
 under ``.perfbench_work/`` in the current directory and removed at the
@@ -29,8 +29,12 @@ import traceback  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
-# Pinned engine set-up.  n = 4 was chosen by measurement (README.md).
-CORES = 4
+# Pinned engine set-up, chosen by measurement (README.md, "Noise
+# controls"): two task slots, and two JIT compiler and two GC threads, so
+# the process asks for well under the host's four cores and a busy host
+# slows it less.  The heap starts at its maximum, so no run spends set-up
+# growing it.
+CORES = 2
 SPARK_CONF = {
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
@@ -40,6 +44,9 @@ SPARK_CONF = {
     "spark.ui.retainedStages": "20000",
     "spark.sql.ui.retainedExecutions": "20000",
 }
+
+JVM_OPTS = (f"-Xms{SPARK_CONF['spark.driver.memory']} -XX:CICompilerCount=2"
+            " -XX:ParallelGCThreads=2 -XX:ConcGCThreads=1")
 
 END_TO_END = {"setup_s": "s", "op_p50_s": "s", "sql_p50_s": "s"}
 
@@ -79,7 +86,7 @@ def start_spark(session, work: str):
         extra_conf={
             **SPARK_CONF,
             "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-            "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+            "spark.driver.extraJavaOptions": f"{JVM_OPTS} -Djava.io.tmpdir={os.path.join(work, 'tmp')}",
         },
     )
     spark.sparkContext.setLogLevel("ERROR")

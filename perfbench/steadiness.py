@@ -1,9 +1,10 @@
 """Repeat the benchmark over seeds and report each metric's spread.
 
-    python3 perfbench/steadiness.py --seeds 1-10 [--seconds 12] [--trace 0]
+    python3 perfbench/steadiness.py --seeds 1-10
 
-Runs every workload once per seed, alternating the workload order from
-seed to seed, and prints one line per run and, per workload and metric,
+Runs every workload of ``BENCHMARK.json`` once per seed, untraced and
+for its ``run_seconds``, alternating the workload order from seed to
+seed, and prints one line per run and, per workload and metric,
 the median, the quartiles (``statistics.quantiles(n=4)``) and the
 spread (q3 - q1) / median.  Run from the repository root.
 """
@@ -31,19 +32,17 @@ def main() -> int:
         bench = json.load(fh)
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--seeds", type=seeds_arg, default=seeds_arg("1-10"))
-    ap.add_argument("--seconds", default=str(bench["run_seconds"]))
-    ap.add_argument("--trace", default="0")
-    ap.add_argument("--workloads", nargs="*", default=[w["name"] for w in bench["workloads"]])
     args = ap.parse_args()
+    workloads = [w["name"] for w in bench["workloads"]]
 
     values: dict[str, dict[str, list[float]]] = {}
     for k, seed in enumerate(args.seeds):
-        order = args.workloads if k % 2 == 0 else args.workloads[::-1]
+        order = workloads if k % 2 == 0 else workloads[::-1]
         for wl in order:
             t = time.perf_counter()
             p = subprocess.run(
                 [sys.executable, os.path.join(HERE, "run.py"), "--workload", wl,
-                 "--seed", str(seed), "--seconds", args.seconds, "--trace", args.trace],
+                 "--seed", str(seed), "--seconds", str(bench["run_seconds"]), "--trace", "0"],
                 capture_output=True, text=True,
             )
             lines = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
