@@ -48,12 +48,13 @@ _GRAM_DIM_CAP = 1024
 def _second_moment_matrix(vecs: DataFrame, dim: int) -> "np.ndarray":
     """Σ_i x_i x_iᵀ in ONE Arrow pass: each task gemms its batches
     (B.T @ B, float64) and emits a single dim² row; the per-task
-    partials then reduce EXECUTOR-SIDE (a single-group applyInPandas
-    sum) so the driver collects exactly ONE dim² row — never O(n_tasks)
-    rows (r16 verdict order #2: at 100 TB the task count is 10⁵-10⁶ and
-    a per-task collect pushes n_tasks × dim² doubles through the
-    driver). Shuffle volume is tasks × dim² floats, never a function of
-    n (guide §4.2: let BLAS do the per-batch flops)."""
+    partials then reduce EXECUTOR-SIDE (posexplode to (i, j)-indexed
+    scalars, groupBy the flat index, sum) so the driver collects dim²
+    scalar rows — never O(n_tasks) rows (r16 verdict order #2: at
+    100 TB the task count is 10⁵-10⁶ and a per-task collect pushes
+    n_tasks × dim² doubles through the driver). Shuffle volume is
+    tasks × dim² floats, never a function of n (guide §4.2: let BLAS do
+    the per-batch flops)."""
     import pandas as pd
 
     def gram(batches):

@@ -2677,9 +2677,12 @@ def parts_coorder_link_prediction(
     Any unordered pair {x, y} — wedge or edge — lands in exactly one
     group (sorted block ids of x%B, y%B), so per-group counts are
     COMPLETE and the global top-20 over per-group top-20s is exact.
-    What shuffles is center-array SLICES (2|adjacency| values + the
-    edge relation), never the wedge stream — the §8 rule: move a
-    lightweight proxy, decide, never re-shuffle the heavy relation.
+    What shuffles is center-array SLICES, never the wedge stream — the
+    §8 rule: move a lightweight proxy, decide, never re-shuffle the
+    heavy relation. Each slice rides in every block-pair row that
+    names its block (~B+1 of them), so the slice shuffle is
+    ~(B+1)·|adjacency| values plus the edge relation: O(B·|adjacency|),
+    which at B=64 approaches the wedge-explode volume it replaced.
 
     Regime dispatch: n_blocks adapts to the EXACT capped wedge count
     (one 1-row aggregate over the persisted neighbor relation) so a

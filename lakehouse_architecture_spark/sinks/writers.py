@@ -67,6 +67,22 @@ def append_rejected(df: DataFrame, base_path: str, name: str) -> None:
     df.write.format("parquet").mode("append").save(os.path.join(base_path, name))
 
 
+def _has_data(path: str) -> bool:
+    """Whether ``path`` holds a table: a directory with at least one
+    entry that is not Spark/Hadoop bookkeeping (``_SUCCESS``, ``.crc``).
+
+    Raises on a URI: the rewrites here stage and swap directories with
+    ``os``/``shutil``, and ``os.path`` calls a ``file://`` or ``s3://``
+    path absent — every MERGE would silently degrade to an overwrite."""
+    if "://" in path:
+        raise ValueError(
+            f"parquet writers take local filesystem paths only, got {path!r}"
+        )
+    return os.path.isdir(path) and any(
+        not e.startswith(("_", ".")) for e in os.listdir(path)
+    )
+
+
 def _delta_merge(
     spark: SparkSession, updates: DataFrame, path: str, keys: list[str]
 ) -> None:  # pragma: no cover - requires delta-spark
@@ -95,10 +111,7 @@ def insert_if_absent(
     form to); existing keys are read with column pruning to the key
     columns only.
     """
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if exists:
+    if _has_data(path):
         existing_keys = spark.read.parquet(path).select(*keys)
         fresh = candidates.join(existing_keys, on=keys, how="left_anti")
     else:
@@ -160,6 +173,8 @@ def compact_table(
     """
     if sort_by and zorder_by:
         raise ValueError("pass sort_by or zorder_by, not both")
+    if not _has_data(path):
+        return 0, 0
     files_before = _data_files(path)
     total_bytes = sum(os.path.getsize(f) for f in files_before)
     n_files = max(1, -(-total_bytes // target_file_bytes))
@@ -193,13 +208,9 @@ def compact_table(
     else:
         out = df.repartition(n_files)
 
-    staging = f"{path}.compact-{uuid.uuid4().hex[:8]}"
+    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     write_partitioned(out, staging, partition_by)
-    backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-    shutil.move(path, backup)
-    shutil.move(staging, path)
-    shutil.rmtree(backup)
-    _refresh_swapped_path(spark, path)
+    _swap_staged(spark, path, staging)
     return len(files_before), len(_data_files(path))
 
 
@@ -236,10 +247,7 @@ def merge_upsert(
     until a full-rewrite compaction (:func:`compact_table`) homogenizes
     the footers; Delta tables carry the schema in the log and do not.
     """
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if not exists:
+    if not _has_data(path):
         write_partitioned(updates, path, partition_by)
         return
 
@@ -276,49 +284,7 @@ def _parquet_rewrite_core(
     # evolve-merge (see merge_upsert docstring) — a plain read could
     # sample an old footer and silently drop the evolved column.
     target = spark.read.option("mergeSchema", "true").parquet(path)
-
-    if partition_by:
-        # Partition pruning: only partitions present in the change set
-        # are read, anti-joined, and rewritten. Collecting DISTINCT
-        # partition VALUES is a driver-side list of partitions (dates),
-        # not keys — bounded and cheap at any scale. The STRING form is
-        # collected alongside via Spark's own cast so the swap below
-        # reconstructs directory names with the engine's formatting
-        # (dates, timestamps, booleans), not Python's str().
-        pairs = (
-            prune_source.select(
-                F.col(partition_by).alias("__v"),
-                F.col(partition_by).cast("string").alias("__s"),
-            )
-            .distinct()
-            .collect()
-        )
-        parts = [r["__v"] for r in pairs]
-        # dict.fromkeys: "" and null both map to __HIVE_DEFAULT_PARTITION__;
-        # a change set containing both must not list the entry twice or
-        # the swap loop would re-process (and destroy) the moved directory.
-        part_entries = list(
-            dict.fromkeys(
-                f"{partition_by}={_escape_partition_value(r['__s'])}"
-                for r in pairs
-            )
-        )
-        # "" is stored as __HIVE_DEFAULT_PARTITION__ and READ BACK AS
-        # NULL, so for pruning purposes it IS null: isin("") would miss
-        # the target's existing default-partition rows while the swap
-        # deletes their directory — silent row loss (r8 ADVICE).
-        null_in_parts = any(v is None or v == "" for v in parts)
-        affected = target.filter(
-            F.col(partition_by).isin(
-                [v for v in parts if v is not None and v != ""]
-            )
-            | (F.col(partition_by).isNull() if null_in_parts else F.lit(False))
-        )
-        untouched_path_ok = True
-    else:
-        affected = target
-        untouched_path_ok = False
-
+    affected, entries = _prune(target, prune_source, partition_by)
     survivors = affected.join(remove_keys, on=keys, how="left_anti")
     extra = [c for c in inserts.columns if c not in affected.columns]
     if extra and not evolve_schema:
@@ -344,30 +310,89 @@ def _parquet_rewrite_core(
 
     staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     write_partitioned(merged, staging, partition_by)
+    _swap_staged(spark, path, staging, entries)
 
-    if untouched_path_ok and partition_by:
-        # Swap every PRUNED partition, not just those present in
-        # staging: a CDC delete that empties a whole partition writes
-        # no staging directory for it, and iterating staging alone
-        # would leave the old directory — and its deleted rows — in
-        # place (the delete_where swap pattern).
-        staged = {
-            e for e in os.listdir(staging) if not e.startswith(("_", "."))
-        }
-        for entry in part_entries:
+
+def _prune(
+    target: DataFrame, prune_source: DataFrame, partition_by: str | None
+) -> tuple[DataFrame, list[str] | None]:
+    """``(affected, entries)``: the rows of ``target`` in the partitions
+    ``prune_source`` touches, and those partitions' directory names.
+    Unpartitioned, every row is affected and ``entries`` is None (a
+    whole-table rewrite).
+
+    Collecting DISTINCT partition VALUES is a driver-side list of
+    partitions (dates), not keys — bounded and cheap at any scale. The
+    STRING form is collected alongside via Spark's own cast so the swap
+    reconstructs directory names with the engine's formatting (dates,
+    timestamps, booleans), not Python's str()."""
+    if not partition_by:
+        return target, None
+    pairs = (
+        prune_source.select(
+            F.col(partition_by).alias("__v"),
+            F.col(partition_by).cast("string").alias("__s"),
+        )
+        .distinct()
+        .collect()
+    )
+    parts = [r["__v"] for r in pairs]
+    # dict.fromkeys: "" and null both map to __HIVE_DEFAULT_PARTITION__;
+    # a change set containing both must not list the entry twice or
+    # the swap loop would re-process (and destroy) the moved directory.
+    entries = list(
+        dict.fromkeys(
+            f"{partition_by}={_escape_partition_value(r['__s'])}" for r in pairs
+        )
+    )
+    # "" is stored as __HIVE_DEFAULT_PARTITION__ and READ BACK AS
+    # NULL, so for pruning purposes it IS null: isin("") would miss
+    # the target's existing default-partition rows while the swap
+    # deletes their directory — silent row loss (r8 ADVICE).
+    null_in_parts = any(v is None or v == "" for v in parts)
+    affected = target.filter(
+        F.col(partition_by).isin([v for v in parts if v is not None and v != ""])
+        | (F.col(partition_by).isNull() if null_in_parts else F.lit(False))
+    )
+    return affected, entries
+
+
+def _swap_staged(
+    spark: SparkSession,
+    path: str,
+    staging: str,
+    entries: list[str] | None = None,
+) -> None:
+    """Replace live data at ``path`` by the rewrite written to
+    ``staging`` — the one commit step under every rewrite here.
+
+    ``entries=None`` swaps the whole table (``staging`` is the new
+    table). Otherwise ``entries`` names the partition directories the
+    rewrite pruned to; each is replaced by its staged namesake, or only
+    removed when staging has none (every row of that partition was
+    deleted — iterating staging alone would leave the old directory and
+    its deleted rows in place). Each old directory is first renamed
+    aside into ``staging/_replaced`` (``_``-prefixed names are hidden
+    from Spark's file listing), then the new one moves in; the old data
+    is deleted only after the last move."""
+    aside = os.path.join(staging, "_replaced")
+    if entries is None:
+        if os.path.exists(path):
+            shutil.move(path, aside)
+        shutil.move(staging, path)
+        # the old table moved in with staging, still hidden as _replaced
+        leftover = os.path.join(path, "_replaced")
+    else:
+        os.mkdir(aside)
+        for entry in entries:
             dst = os.path.join(path, entry)
             if os.path.exists(dst):
-                shutil.rmtree(dst)
-            if entry in staged:
+                shutil.move(dst, os.path.join(aside, entry))
+            if os.path.exists(os.path.join(staging, entry)):
                 shutil.move(os.path.join(staging, entry), dst)
-            # else: every row of that partition was removed — the
-            # directory stays deleted.
-        shutil.rmtree(staging)
-    else:
-        backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        shutil.move(path, backup)
-        shutil.move(staging, path)
-        shutil.rmtree(backup)
+        leftover = staging
+    if os.path.exists(leftover):
+        shutil.rmtree(leftover)
     _refresh_swapped_path(spark, path)
 
 
@@ -460,10 +485,7 @@ def apply_changes(
             "expected 'upsert' or 'delete'"
         )
     upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
-    exists = os.path.exists(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
-    if not exists:
+    if not _has_data(path):
         write_partitioned(upserts, path, partition_by)
         return
     _parquet_rewrite_core(
@@ -495,56 +517,27 @@ def delete_where(
     rewritten — at 100 TB a delete keyed to a few partitions touches
     only those directories.
     """
+    if not _has_data(path):
+        return 0
     # mergeSchema for the same mixed-footer reason as merge_upsert: a
     # pruned rewrite must never re-materialize partitions through a
     # sampled old schema.
     target = spark.read.option("mergeSchema", "true").parquet(path)
-
-    if partition_by:
-        # Partitions that actually contain matches: a distinct over the
-        # partition column of matching rows — partition values, bounded.
-        parts = [
-            r[0]
-            for r in target.filter(predicate)
-            .select(partition_by)
-            .distinct()
-            .collect()
-        ]
-        if not parts:
-            return 0
-        affected = target.filter(F.col(partition_by).isin(parts))
-    else:
-        affected = target
+    # the partitions that actually contain matches
+    affected, entries = _prune(target, target.filter(predicate), partition_by)
+    if entries == []:
+        return 0
 
     n_before = affected.count()
-    survivors = affected.filter(~predicate)
+    # SQL DELETE keeps rows whose predicate is NULL, not only FALSE
+    survivors = affected.filter(predicate.isNull() | ~predicate)
     n_after = survivors.count()
     if n_after == n_before:
         return 0
 
     staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
     write_partitioned(survivors, staging, partition_by)
-
-    if partition_by:
-        staged = {
-            e for e in os.listdir(staging) if not e.startswith(("_", "."))
-        }
-        for value in parts:
-            entry = f"{partition_by}={value}"
-            dst = os.path.join(path, entry)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            if entry in staged:
-                shutil.move(os.path.join(staging, entry), dst)
-            # else: every row of that partition was deleted — directory
-            # stays removed.
-        shutil.rmtree(staging)
-    else:
-        backup = f"{path}.old-{uuid.uuid4().hex[:8]}"
-        shutil.move(path, backup)
-        shutil.move(staging, path)
-        shutil.rmtree(backup)
-    _refresh_swapped_path(spark, path)
+    _swap_staged(spark, path, staging, entries)
     return n_before - n_after
 
 

@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from lakehouse_architecture_spark.plans.archive import archive_files
 from lakehouse_architecture_spark.sinks.writers import insert_if_absent
 
@@ -441,13 +443,18 @@ def test_apply_changes_upsert_delete_batch(spark, tmp_path):
     assert again == got
 
 
-def test_merge_rewrite_hive_escaped_partition_values(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["apply_changes", "delete_where"])
+def test_merge_rewrite_hive_escaped_partition_values(spark, tmp_path, entry):
     """The r8 ADVICE finding: the staged swap rebuilt directory names
     with a plain f-string, which mismatches Hive-escaped names for
     values containing % : = # … — the staged rewrite was silently
     discarded and stale/deleted rows survived. Partition values here
-    are chosen so every one needs escaping; the delete empties a whole
-    partition, the exact shape that exposed the old miss."""
+    are chosen so every one needs escaping; each rewrite entry point
+    empties a whole partition, the exact shape that exposed the old
+    miss (DELETE, on its own copy of the swap, still reported such rows
+    deleted while they stayed on disk)."""
+    from pyspark.sql import functions as F
+
     from lakehouse_architecture_spark.sinks import writers
 
     path = str(tmp_path / "esc")
@@ -461,34 +468,42 @@ def test_merge_rewrite_hive_escaped_partition_values(spark, tmp_path):
         "k long, v string, p string",
     )
     writers.write_partitioned(base, path, "p")
-    import os
-
     assert sorted(
         e for e in os.listdir(path) if not e.startswith(("_", "."))
     ) == ["p=50%25off", "p=h%3Am", "p=k%3Dv%23x"]
-    changes = spark.createDataFrame(
-        [
-            (1, "A2", "h:m", "upsert"),   # update inside escaped dir
-            (3, None, "50%off", "delete"),  # empties the whole partition
-            (5, "e", "k=v#x", "upsert"),  # insert into escaped dir
-        ],
-        "k long, v string, p string, op string",
-    )
-    writers.apply_changes(spark, changes, path, ["k"], partition_by="p")
+    if entry == "apply_changes":
+        changes = spark.createDataFrame(
+            [
+                (1, "A2", "h:m", "upsert"),   # update inside escaped dir
+                (3, None, "50%off", "delete"),  # empties the whole partition
+                (5, "e", "k=v#x", "upsert"),  # insert into escaped dir
+            ],
+            "k long, v string, p string, op string",
+        )
+        writers.apply_changes(spark, changes, path, ["k"], partition_by="p")
+        want = {
+            (1, "A2", "h:m"),
+            (2, "b", "h:m"),
+            (4, "d", "k=v#x"),
+            (5, "e", "k=v#x"),
+        }
+    else:
+        # one row out of an escaped dir, and the whole 50%off partition
+        n = writers.delete_where(
+            spark, path, F.col("k").isin(1, 3), partition_by="p"
+        )
+        assert n == 2
+        want = {(2, "b", "h:m"), (4, "d", "k=v#x")}
     got = {(r.k, r.v, r.p) for r in spark.read.parquet(path).collect()}
-    assert got == {
-        (1, "A2", "h:m"),
-        (2, "b", "h:m"),
-        (4, "d", "k=v#x"),
-        (5, "e", "k=v#x"),
-    }
+    assert got == want
     # the emptied partition's directory is gone, not stale
     assert "p=50%25off" not in os.listdir(path)
     # no staging/backup residue
     assert not [e for e in os.listdir(str(tmp_path)) if "staging" in e]
 
 
-def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path):
+@pytest.mark.parametrize("entry", ["merge_upsert", "delete_where"])
+def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
     """The r9 ADVICE finding: Spark STORES an empty-string partition
     value as __HIVE_DEFAULT_PARTITION__ and READS IT BACK AS NULL, so
     for pruning purposes "" IS null — the old isin("") filter missed
@@ -496,27 +511,42 @@ def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path):
     deleted their directory: silent row loss. Also pins the
     dedup of part_entries when a change set contains BOTH None and ""
     (one directory, previously listed twice — the second pass
-    destroyed the freshly-moved partition)."""
-    import os
+    destroyed the freshly-moved partition). DELETE pruned with a bare
+    isin over the matching partition values, which never matches
+    null: it deleted nothing and reported 0."""
+    from pyspark.sql import functions as F
 
     from lakehouse_architecture_spark.sinks import writers
 
     path = str(tmp_path / "nullpart")
     base = spark.createDataFrame(
-        [(1, "keepme", None), (2, "b", "p1")],
+        [(1, "keepme", None), (2, "b", "p1"), (3, "c", "")],
         "k long, v string, p string",
     )
     writers.write_partitioned(base, path, "p")
     assert "p=__HIVE_DEFAULT_PARTITION__" in os.listdir(path)
 
-    # change set uses "" — same directory as the existing null row
+    def rows():
+        return {(r.k, r.v, r.p) for r in spark.read.parquet(path).collect()}
+
+    if entry == "delete_where":
+        n = writers.delete_where(spark, path, F.col("k") == 3, partition_by="p")
+        assert n == 1
+        assert rows() == {(1, "keepme", None), (2, "b", "p1")}
+        return
+
+    # change set uses "" — same directory as the existing null rows
     upd = spark.createDataFrame(
         [(10, "x", "")], "k long, v string, p string"
     )
     writers.merge_upsert(spark, upd, path, ["k"], partition_by="p")
-    got = {(r.k, r.v, r.p) for r in spark.read.parquet(path).collect()}
-    # the pre-existing null-partition row SURVIVES ("" reads back null)
-    assert got == {(1, "keepme", None), (2, "b", "p1"), (10, "x", None)}
+    # the pre-existing null-partition rows SURVIVE ("" reads back null)
+    assert rows() == {
+        (1, "keepme", None),
+        (2, "b", "p1"),
+        (3, "c", None),
+        (10, "x", None),
+    }
 
     # change set with BOTH None and "": one directory entry, processed
     # once — update lands, survivors kept, no duplicate-swap crash
@@ -525,13 +555,63 @@ def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path):
         "k long, v string, p string",
     )
     writers.merge_upsert(spark, upd2, path, ["k"], partition_by="p")
-    got2 = {(r.k, r.v, r.p) for r in spark.read.parquet(path).collect()}
-    assert got2 == {
+    assert rows() == {
         (1, "updated", None),
         (2, "b", "p1"),
+        (3, "c", None),
         (10, "x", None),
         (11, "y", None),
     }
+
+
+@pytest.mark.parametrize("partition_by", [None, "p"])
+def test_delete_where_keeps_rows_whose_predicate_is_null(
+    spark, tmp_path, partition_by
+):
+    """SQL DELETE removes only rows whose predicate is TRUE: a NULL
+    predicate (x > 10 over a null x) keeps the row, like FALSE."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_architecture_spark.sinks import writers
+
+    path = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(None, "a"), (5, "a"), (50, "a")], "x int, p string"
+    )
+    writers.write_partitioned(df, path, partition_by)
+    n = writers.delete_where(
+        spark, path, F.col("x") > 10, partition_by=partition_by
+    )
+    assert n == 1
+    assert {r.x for r in spark.read.parquet(path).collect()} == {None, 5}
+    # the replaced data is gone from both the table and its siblings
+    assert "_replaced" not in os.listdir(path)
+    assert os.listdir(str(tmp_path)) == ["t"]
+
+
+def test_writers_refuse_uri_paths(spark, tmp_path):
+    """The writers stage and swap with os/shutil, for which a URI never
+    exists: a second MERGE into file:///…/t used to overwrite the table
+    and silently lose every key the update did not carry. Every entry
+    point now refuses a URI before it writes anything."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_architecture_spark.sinks import writers
+
+    uri = (tmp_path / "t").as_uri()  # file:///…/t
+    df = spark.createDataFrame([(1, "v1")], "k int, v string")
+    cdc = spark.createDataFrame([(1, "v1", "upsert")], "k int, v string, op string")
+    calls = [
+        lambda: writers.merge_upsert(spark, df, uri, ["k"]),
+        lambda: writers.apply_changes(spark, cdc, uri, ["k"]),
+        lambda: writers.insert_if_absent(spark, df, uri, ["k"]),
+        lambda: writers.delete_where(spark, uri, F.col("k") == 1),
+        lambda: writers.compact_table(spark, uri),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="local filesystem paths only"):
+            call()
+    assert os.listdir(str(tmp_path)) == []
 
 
 def test_escape_partition_value_contract():
