@@ -10,6 +10,8 @@ import os
 import shutil
 from dataclasses import dataclass
 
+from lakehouse_architecture_spark.sinks.writers import _require_local_path
+
 
 @dataclass
 class ArchiveResult:
@@ -27,7 +29,12 @@ def archive_files(
     an already-archived name is overwritten, mirroring S3 copy+delete).
     Batched like the Lambda (batches of 100,
     lambda_function.py:24) so a failure mid-run leaves a resumable state,
-    never a half-copied file."""
+    never a half-copied file.
+
+    Local filesystem paths only: a ``scheme://`` source or archive raises
+    ``ValueError`` before any file moves."""
+    for path in (source_dir, archive_dir):
+        _require_local_path(path)
     os.makedirs(archive_dir, exist_ok=True)
     moved: list[str] = []
     failed: list[str] = []

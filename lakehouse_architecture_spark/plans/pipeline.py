@@ -160,6 +160,9 @@ def run_pipeline(
         if n_rejected:
             append_rejected(res.rejected, rejected_base, name)
 
+        # Plain read, not sources.readers.read_parquet: every cycle adds a
+        # date partition, so its footer-keyed schema memo would never hit
+        # and every read would walk the footers for nothing.
         curated = spark.read.parquet(os.path.join(curated_base, name))
         res.stats = {
             "clean_rows": curated.count(),

@@ -67,17 +67,22 @@ def append_rejected(df: DataFrame, base_path: str, name: str) -> None:
     df.write.format("parquet").mode("append").save(os.path.join(base_path, name))
 
 
+def _require_local_path(path: str) -> None:
+    """Raise on a URI. ``os``/``shutil`` treat ``file://…`` or ``s3://…``
+    as a relative local name: ``os.path`` calls it absent and
+    ``os.makedirs`` creates a ``s3:/…`` tree in the working directory."""
+    if "://" in path:
+        raise ValueError(f"local filesystem paths only, got {path!r}")
+
+
 def _has_data(path: str) -> bool:
     """Whether ``path`` holds a table: a directory with at least one
     entry that is not Spark/Hadoop bookkeeping (``_SUCCESS``, ``.crc``).
 
     Raises on a URI: the rewrites here stage and swap directories with
-    ``os``/``shutil``, and ``os.path`` calls a ``file://`` or ``s3://``
-    path absent — every MERGE would silently degrade to an overwrite."""
-    if "://" in path:
-        raise ValueError(
-            f"parquet writers take local filesystem paths only, got {path!r}"
-        )
+    ``os``/``shutil``, so every MERGE into a URI would silently degrade
+    to an overwrite."""
+    _require_local_path(path)
     return os.path.isdir(path) and any(
         not e.startswith(("_", ".")) for e in os.listdir(path)
     )

@@ -10,6 +10,8 @@ instead of silently nulling them.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
@@ -80,9 +82,9 @@ def read_csv_inferred(
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(parsed, corrupt) split; both sides keep the source columns.
 
-    The frame is cached first: Spark disallows plans that touch only the
-    internal corrupt-record column of a raw CSV scan, and the split fans
-    out to two consumers anyway.
+    The frame is local-checkpointed first: Spark disallows plans that
+    touch only the internal corrupt-record column of a raw CSV scan, and
+    the split fans out to two consumers anyway.
     """
     if CORRUPT_COL not in df.columns:
         return df, df.limit(0)
@@ -161,8 +163,102 @@ def read_xml_typed(
     )
 
 
+# read_parquet's schema memo: inference key -> the StructType Spark
+# inferred for it. Process-wide and bounded; it holds schemas only, never
+# DataFrames or plans, so every read still builds and plans afresh.
+_SCHEMAS: dict = {}
+_SCHEMAS_MAX = 1024
+
+# The session confs Spark's parquet schema inference and partition
+# discovery read; a flipped conf is a new key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``_SUCCESS``, ``.crc``, ...);
+    ``_k=v`` partition directories are kept."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _inference_key(spark: SparkSession, path: str):
+    """Everything Spark's schema inference over ``path`` reads: the data
+    files' footers (parquet schema plus key-value metadata, where
+    Spark-written files keep their row schema), the partition directory
+    names and the inference confs.
+
+    None when this process cannot see all of it, and the caller lets Spark
+    infer: a URI, a glob or missing path, no readable data file, summary
+    files (Spark infers from those first), or data files whose footers
+    differ (Spark then infers from whichever it lists first). The key is
+    built from the parquet schema, not its Arrow conversion: an INT96 and
+    an INT64-nanos column both convert to ``timestamp[ns]``, while Spark
+    infers TIMESTAMP for one and BIGINT (``nanosAsLong``) for the other."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if "://" in path or not os.path.exists(path):
+        return None
+    files = []
+    if os.path.isfile(path):
+        files.append(("", path))
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for n in names:
+            if n.startswith(("_metadata", "_common_metadata")):
+                return None
+            if not _hidden(n):
+                files.append((os.path.relpath(root, path), os.path.join(root, n)))
+    footers = set()
+    for _, f in files:
+        try:
+            md = pq.read_metadata(f)
+        except (OSError, pa.ArrowException):
+            return None
+        # the schema tree, without repr's first line (the object address)
+        tree = str(md.schema).partition("\n")[2]
+        footers.add((tree, tuple(sorted((md.metadata or {}).items()))))
+    if len(footers) != 1:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    return footers.pop(), frozenset(d for d, _ in files), confs
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    """Parquet scan without a schema-inference job when the files were
+    seen before.
+
+    ``spark.read.parquet`` launches one Spark job per read to infer the
+    schema from a footer. Here the footers are read in this process
+    (~0.2 ms a file, no job) and keyed with the partition directory names
+    and the inference confs (:func:`_inference_key`); the first read of a
+    key lets Spark infer and memoizes the result. Because the key is the
+    input of inference, an entry cannot go stale: a rewritten file or a
+    flipped conf is a new key. Paths this process cannot list fall back to
+    plain ``spark.read.parquet``."""
+    key = _inference_key(spark, path)
+    if key is None:
+        return spark.read.parquet(path)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+        # store only if no file changed while Spark inferred
+        if _inference_key(spark, path) == key:
+            if len(_SCHEMAS) >= _SCHEMAS_MAX:
+                _SCHEMAS.pop(next(iter(_SCHEMAS)), None)
+            _SCHEMAS[key] = schema
+    return spark.read.schema(schema).parquet(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -1,9 +1,14 @@
 """Loaders for the driver's synthetic star-schema tables.
 
 One parquet file per table under ``{sf_dir}/{name}.parquet`` (see
-/root/repo/TESTDATA.md). All reads are plain ``spark.read.parquet`` so
-Catalyst gets pushdown/pruning for free; at cluster scale these would be
-directories of many files and nothing here changes.
+TESTDATA.md at the repository root). Every read goes through
+:func:`~lakehouse_architecture_spark.sources.readers.read_parquet`: the
+footers are read in this process and the schema Spark inferred for the
+same footers, partition directories and confs is reused, so a load
+launches no schema-inference job after a table's first. The scan itself is a plain
+parquet scan, so Catalyst gets pushdown/pruning for free; at cluster scale
+these would be directories of many files, and URIs fall back to Spark's
+own inference.
 """
 
 from __future__ import annotations
@@ -11,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
+
+from lakehouse_architecture_spark.sources.readers import read_parquet
 
 TESTDATA_TABLES = (
     "region",
@@ -29,7 +36,7 @@ TESTDATA_TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,7 +58,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     safe to set on a live session."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

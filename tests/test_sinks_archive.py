@@ -41,6 +41,26 @@ def test_archive_files_moves_batches(tmp_path):
     assert archive_files(str(src), str(dst)).moved == []
 
 
+@pytest.mark.parametrize("uri_side", ["source", "archive"])
+def test_archive_files_refuses_uri_paths(tmp_path, monkeypatch, uri_side):
+    """os/shutil take ``s3://b/x`` for a relative local name: the archive
+    used to be created as an ``s3:/b/x`` tree in the working directory
+    and the raw files moved into it. A URI on either side is refused
+    before any file is touched."""
+    src = tmp_path / "raw"
+    src.mkdir()
+    (src / "f0.csv").write_text("x")
+    monkeypatch.chdir(tmp_path)
+    if uri_side == "source":
+        args = (src.as_uri(), str(tmp_path / "archive"))
+    else:
+        args = (str(src), "s3://b/x")
+    with pytest.raises(ValueError, match="local filesystem paths only"):
+        archive_files(*args)
+    assert os.listdir(tmp_path) == ["raw"]
+    assert os.listdir(src) == ["f0.csv"]
+
+
 def test_knn_ivf_recall(spark, sf_dir):
     from pyspark.sql import functions as F
 
