@@ -8,11 +8,16 @@ and src/glue_etl.py:216-391) and the Step Functions outer lifecycle
 
 Deliberate departures, per SURVEY.md §4's bug list:
 - no per-stage ``count()`` actions for logging (they re-execute lineage);
-  stats are computed once from the final frames;
+  the stats are one count of the rejected frame, which also gates its
+  append, and a count and LIMIT-5 probe of the curated zone read back
+  after the MERGE;
 - deterministic dedup (row_number over PK with a defined ordering) instead
   of ``dropDuplicates``;
-- ``cache()`` only where a frame genuinely fans out (the valid/invalid
-  split and the RI reference dims).
+- materialisation only where a frame genuinely fans out: the raw batch
+  under the valid/invalid split is a ``localCheckpoint`` taken in
+  ``sources.readers.split_corrupt`` (``valid`` itself is never cached),
+  and the curated RI reference dims are held in one-slot persists
+  (``operators.caching``).
 """
 
 from __future__ import annotations

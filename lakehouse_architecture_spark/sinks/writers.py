@@ -26,6 +26,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lakehouse_architecture_spark.sources.readers import _hidden
+
 try:  # pragma: no cover - exercised only where delta-spark is installed
     from delta.tables import DeltaTable
 
@@ -77,15 +79,14 @@ def _require_local_path(path: str) -> None:
 
 def _has_data(path: str) -> bool:
     """Whether ``path`` holds a table: a directory with at least one
-    entry that is not Spark/Hadoop bookkeeping (``_SUCCESS``, ``.crc``).
+    entry Spark's file listing keeps, so not bookkeeping (``_SUCCESS``,
+    ``.crc``) but ``_k=v`` partition directories included.
 
     Raises on a URI: the rewrites here stage and swap directories with
     ``os``/``shutil``, so every MERGE into a URI would silently degrade
     to an overwrite."""
     _require_local_path(path)
-    return os.path.isdir(path) and any(
-        not e.startswith(("_", ".")) for e in os.listdir(path)
-    )
+    return os.path.isdir(path) and any(not _hidden(e) for e in os.listdir(path))
 
 
 def _delta_merge(
@@ -131,11 +132,12 @@ def insert_if_absent(
 
 def _data_files(path: str) -> list[str]:
     out = []
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
         out.extend(
             os.path.join(root, f)
             for f in files
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
+            if f.endswith(".parquet") and not _hidden(f)
         )
     return out
 

@@ -5,6 +5,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -32,3 +33,31 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL
+
+
+@pytest.fixture
+def jobs_launched(spark):
+    """``jobs_launched(fn)``: the description of every Spark job ``fn``
+    launches, counted under a job group of its own (jobs Spark describes
+    itself, such as "Listing leaf files ...", keep their own text)."""
+    sc = spark.sparkContext
+
+    def run(fn) -> list[str]:
+        props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+        saved = {k: sc.getLocalProperty(k) for k in props}
+        group = f"jobs-launched-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+        store = sc._jsc.sc().statusStore()
+        out = []
+        for jid in sc.statusTracker().getJobIdsForGroup(group):
+            desc = store.job(jid).description()
+            out.append(desc.get() if desc.isDefined() else "")
+        return out
+
+    return run

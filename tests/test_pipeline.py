@@ -5,6 +5,7 @@ update semantics."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 from pyspark.sql import functions as F
@@ -140,3 +141,57 @@ def test_merge_upsert_unpartitioned(spark, tmp_path):
     )
     out = {r.k: r.v for r in spark.read.parquet(path).collect()}
     assert out == {1: "a", 2: "B"}
+
+
+def test_pipeline_over_many_date_partitions_launches_no_listing_job(
+    spark, tmp_path, jobs_launched
+):
+    """Past 32 partition directories Spark lists a table with a job of
+    its own (one task per directory) unless it lists on the driver,
+    which ``get_spark`` sets for a local master. A daily curated zone
+    passes 32 dates after a month: no read of it may list by job."""
+    dates = [dt.date(2025, 1, 1) + dt.timedelta(days=i) for i in range(40)]
+    history = tmp_path / "history"
+    history.mkdir()
+    raw = {
+        "products": _write(history, "products", PRODUCTS_CSV, ["1,4,Books,P1"]),
+        "orders": _write(
+            history, "orders", ORDERS_CSV,
+            [f"{i},{500 + i},1,{d}T10:00:00,10.00,{d}" for i, d in enumerate(dates)],
+        ),
+        "order_items": _write(
+            history, "order_items", ITEMS_CSV,
+            [f"{i},{500 + i},1,1,1,1,0,{d}T10:00:00,{d}" for i, d in enumerate(dates)],
+        ),
+    }
+    curated = str(tmp_path / "curated")
+    rejected = str(tmp_path / "rejected")
+    run_pipeline(spark, raw, curated, rejected)
+    assert len(os.listdir(os.path.join(curated, "orders"))) >= 40
+
+    # the next day: one new order, and a late correction to the first day
+    new, first = dates[-1] + dt.timedelta(days=1), dates[0]
+    day = tmp_path / "day"
+    day.mkdir()
+    raw = {
+        "products": _write(day, "products", PRODUCTS_CSV, ["1,4,Books,P1"]),
+        "orders": _write(
+            day, "orders", ORDERS_CSV,
+            [f"90,600,1,{new}T10:00:00,30.00,{new}",
+             f"0,500,1,{first}T10:00:00,20.00,{first}"],
+        ),
+        "order_items": _write(
+            day, "order_items", ITEMS_CSV,
+            [f"90,600,1,1,1,1,0,{new}T10:00:00,{new}"],
+        ),
+    }
+    jobs = jobs_launched(lambda: run_pipeline(spark, raw, curated, rejected))
+    assert jobs, "the cycle launched no job at all: nothing was counted"
+    assert [j for j in jobs if j.startswith("Listing leaf files")] == []
+
+    orders = {
+        r.order_id: r.total_amount
+        for r in spark.read.parquet(os.path.join(curated, "orders")).collect()
+    }
+    assert len(orders) == 41
+    assert (orders[500], orders[600]) == (20.0, 30.0)

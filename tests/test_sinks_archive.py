@@ -522,6 +522,42 @@ def test_merge_rewrite_hive_escaped_partition_values(spark, tmp_path, entry):
     assert not [e for e in os.listdir(str(tmp_path)) if "staging" in e]
 
 
+@pytest.mark.parametrize("entry", ["merge_upsert", "delete_where", "compact_table"])
+def test_merge_rewrite_underscore_partition_column(spark, tmp_path, entry):
+    """A partition column named ``_p`` writes ``_p=v`` directories,
+    which Spark reads as data. Taking them for bookkeeping (``_SUCCESS``)
+    made the table look empty: MERGE overwrote the touched partitions
+    and lost their untouched rows, DELETE and compaction did nothing."""
+    from pyspark.sql import functions as F
+
+    from lakehouse_architecture_spark.sinks import writers
+
+    path = str(tmp_path / "t")
+    base = spark.createDataFrame(
+        [(1, "a", "a"), (2, "b", "a"), (3, "c", "b")],
+        "k long, v string, _p string",
+    )
+    writers.write_partitioned(base, path, "_p")
+    assert sorted(e for e in os.listdir(path) if "=" in e) == ["_p=a", "_p=b"]
+    if entry == "merge_upsert":
+        upd = spark.createDataFrame([(1, "A", "a")], "k long, v string, _p string")
+        writers.merge_upsert(spark, upd, path, ["k"], partition_by="_p")
+        want = {(1, "A", "a"), (2, "b", "a"), (3, "c", "b")}
+    elif entry == "delete_where":
+        n = writers.delete_where(spark, path, F.col("k") == 1, partition_by="_p")
+        assert n == 1
+        want = {(2, "b", "a"), (3, "c", "b")}
+    else:
+        files = [
+            f for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
+        ]
+        before, _after = writers.compact_table(spark, path, partition_by="_p")
+        assert before == len(files) > 0
+        want = {(1, "a", "a"), (2, "b", "a"), (3, "c", "b")}
+    got = {(r.k, r.v, r._p) for r in spark.read.parquet(path).collect()}
+    assert got == want
+
+
 @pytest.mark.parametrize("entry", ["merge_upsert", "delete_where"])
 def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
     """The r9 ADVICE finding: Spark STORES an empty-string partition

@@ -83,22 +83,6 @@ def _plain_schema(spark, sf_dir: str, name: str) -> StructType:
     )
 
 
-def _jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under a job group of its own."""
-    sc = spark.sparkContext
-    props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-    saved = {k: sc.getLocalProperty(k) for k in props}
-    group = f"jobs-launched-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        for k, v in saved.items():
-            sc.setLocalProperty(k, v)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.mark.parametrize("name", TESTDATA_TABLES)
 def test_load_table_schema_matches_plain_read(spark, sf_dir, name):
     for _ in range(2):  # the first load may fill the memo, the second reads it
@@ -161,7 +145,7 @@ def test_loader_pins_utc_on_non_utc_session(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", original)
 
 
-def test_second_load_of_a_table_launches_no_job(spark, sf_dir, tmp_path):
+def test_second_load_of_a_table_launches_no_job(spark, sf_dir, tmp_path, jobs_launched):
     """Only the first load of a footer runs Spark's schema-inference job."""
     # a column name no other test writes, so the first load is a miss
     fresh = pq.read_table(f"{sf_dir}/orders.parquet")
@@ -170,10 +154,10 @@ def test_second_load_of_a_table_launches_no_job(spark, sf_dir, tmp_path):
     )
     pq.write_table(fresh, str(tmp_path / "orders.parquet"))
 
-    assert _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "orders")) >= 1
-    assert _jobs_launched(spark, lambda: load_table(spark, str(tmp_path), "orders")) == 0
-    assert _jobs_launched(spark, lambda: load_table(spark, sf_dir, "orders")) <= 1
-    assert _jobs_launched(spark, lambda: load_table(spark, sf_dir, "orders")) == 0
+    assert len(jobs_launched(lambda: load_table(spark, str(tmp_path), "orders"))) >= 1
+    assert len(jobs_launched(lambda: load_table(spark, str(tmp_path), "orders"))) == 0
+    assert len(jobs_launched(lambda: load_table(spark, sf_dir, "orders"))) <= 1
+    assert len(jobs_launched(lambda: load_table(spark, sf_dir, "orders"))) == 0
 
 
 @pytest.mark.parametrize("change", ["added", "renamed"])
