@@ -26,50 +26,20 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, SF0001_DIR)
 
 
-# The verify driver checks queries in dict-insertion order (first N).
-# Ordering strategy: a couple of stable sentinels, then the queries that
-# most need a FRESH driver row this round (never-checked operators and
-# regression fixes), then operator families. Queries already green in
-# r1/r2 CORRECTNESS files keep that evidence even when rotated past the
-# window, so the window is spent on new information.
+# Queries are verified in dict-insertion order, the first N of them: the
+# sentinels and the priority list fill that window, and every other
+# query follows in registry order.
 _SENTINELS = [
     "q1_pricing_summary",
     "q3_shipping_priority",
 ]
-# Round-16 priority. Standing-row staleness after r15
-# (CORRECTNESS_r01..r15, latest round per query): 42 rows last checked
-# r11, 46 r12, 46 r13, 43 r14, 50 r15 (plus the retired
-# emb_near_dup_lsh's r9 row). Window arithmetic, 50 slots:
-# 2 sentinels
-# + 3 r16 NEW queries (docs_split_leakage_audit — cross-split
-#   duplicate-leakage audit over the dedup ladder's content hashes,
-#   arithmetic pair counts, never materialized pairs;
-#   docs_sample_topk_per_source — deterministic k-per-group sample via
-#   two-phase salted top-k, oracle IS the naive per-source window so
-#   the gate proves the scale-safe plan row-identical;
-#   lineitem_winsorized_price_stats — p05/p95 winsorized robust stats
-#   riding the r16 bucketed interpolated-quantile operator)
-# + 3 r16-TOUCHED queries (approx_distinct_and_quantile and
-#   quantiles_exact — exact anchors restated through
-#   grouped_interpolated_quantiles, no per-group percentile buffer
-#   anywhere in either plan, 27.2 -> ~3 s at sf0.1;
-#   parts_coorder_weighted_pagerank — weight guard now rejects NaN)
-# + all 42 remaining r11-stale rows (the rotation the r15 verdict
-#   ordered — after this window no standing row is older than r12)
-# = 50 exactly (asserted by
-# tests/test_oracle_gate.py::test_driver_window_composition).
-# The 46 r12-stale rows lead r17; the board keeps the
-# <=4-round refresh cadence.
 _PRIORITY = [
-    # (a) r16 new: first driver rows
     "docs_split_leakage_audit",
     "docs_sample_topk_per_source",
     "lineitem_winsorized_price_stats",
-    # (b) r16-touched (quantile-anchor restatement; NaN weight guard)
     "approx_distinct_and_quantile",
     "quantiles_exact",
     "parts_coorder_weighted_pagerank",
-    # (c) all 42 r11-stale rows (oldest standing)
     "agg_cube_flags",
     "agg_grouping_sets",
     "agg_rollup_status_priority",
@@ -113,221 +83,14 @@ _PRIORITY = [
     "window_rank_orders",
     "window_running_spend",
 ]
-_FAMILY_ORDER = [
-    "profiling",
-    "dedup_sim",
-    "events",
-    "text",
-    "embeddings",
-    "sampling",
-    "validation_queries",
-    "curation",
-    "catalog_sql",
-    "advanced",
-]
-# Queries pushed past the driver's check horizon this round:
-# everything outside the 50-slot window above. All have standing green
-# driver rows no older than r12 (the full r11-stale block is IN the
-# window), and none was touched in r16, so the window is spent on the
-# rotation plus the round's six changed/new queries. Regenerated
-# each round as registry - sentinels - priority.
-_SECOND_TIER = {
-    "agg_argmax_by_status",
-    "asof_join_forward_tolerance",
-    "asof_join_purchase_click",
-    "basket_brand_pairs",
-    "customers_entity_resolution",
-    "customers_fuzzy_name_stats",
-    "customers_fuzzy_pairs_d2",
-    "customers_fuzzy_pairs_d2_capped",
-    "docs_bigram_cross_entropy",
-    "docs_bpe_encode_stats",
-    "docs_chunk_manifest",
-    "docs_copied_span_profile",
-    "docs_curation_funnel",
-    "docs_dedup_keep_best",
-    "docs_dedup_savings_report",
-    "docs_dup_cluster_size_histogram",
-    "docs_dup_components",
-    "docs_dup_profile_by_source",
-    "docs_exact_dedupe_count",
-    "docs_exact_dup_groups",
-    "docs_fingerprint",
-    "docs_hash_split_counts",
-    "docs_incremental_copied_spans",
-    "docs_incremental_near_dups",
-    "docs_incremental_near_dups_indexed",
-    "docs_lang_id",
-    "docs_length_decile_profile",
-    "docs_length_histogram",
-    "docs_mixture_resample",
-    "docs_ngram_jaccard_pairs",
-    "docs_novelty_score",
-    "docs_overlap_coefficient_pairs",
-    "docs_packing_manifest",
-    "docs_pii_scrub",
-    "docs_prefix_entity_resolution",
-    "docs_prefix_filter_jaccard_join",
-    "docs_prefix_filter_jaccard_join_strict",
-    "docs_prefix_fuzzy_pairs_d2",
-    "docs_quality_classifier_qa",
-    "docs_quality_score",
-    "docs_repetition_score",
-    "docs_script_census",
-    "docs_shared_span_pairs",
-    "docs_shingle_stats",
-    "docs_source_shingle_overlap",
-    "docs_stratified_sample",
-    "docs_test_contamination",
-    "docs_tfidf_top_terms",
-    "docs_token_entropy",
-    "docs_token_freq_spectrum",
-    "docs_token_stats",
-    "docs_top_terms",
-    "docs_vocab_growth_by_source",
-    "docs_weighted_sample_topk",
-    "docs_zipf_slope",
-    "emb_centroid_norm_by_label",
-    "emb_dim_variance_topk",
-    "emb_int8_quantization",
-    "emb_ivf_probe_stats",
-    "emb_kmeans_clusters",
-    "emb_knn_bruteforce",
-    "emb_knn_bruteforce_decimal",
-    "emb_knn_ivf",
-    "emb_knn_ivf_md5",
-    "emb_knn_lsh",
-    "emb_lsh_candidate_stats",
-    "emb_near_dup_lsh_strict",
-    "emb_near_dup_pairs",
-    "emb_norms",
-    "emb_semantic_dedup",
-    "emb_top_pc_power_iteration",
-    "events_ab_test_value_ztest",
-    "events_anomaly_mad",
-    "events_anomaly_zscore",
-    "events_chi2_type_dow",
-    "events_cms_topk_accuracy",
-    "events_concurrent_sessions",
-    "events_cusum_daily_drift",
-    "events_daily_active_users",
-    "events_daily_count_ewma",
-    "events_dow_hour_heatmap",
-    "events_funnel",
-    "events_gapfilled_hourly",
-    "events_hll_accuracy_qa",
-    "events_hll_intersection_qa",
-    "events_hll_sketch_rollup",
-    "events_hourly_by_type",
-    "events_kmv_daily_rollup",
-    "events_kmv_intersection_qa",
-    "events_kmv_new_vs_returning",
-    "events_ohlc_downsample",
-    "events_props_extract",
-    "events_retention_cohorts",
-    "events_seasonal_anomaly",
-    "events_session_length_percentiles",
-    "events_session_overlap_pairs",
-    "events_sessionization",
-    "events_stickiness_ratio",
-    "events_tumbling_window",
-    "events_type_transitions",
-    "events_type_value_stats",
-    "events_user_lifetime",
-    "events_user_volume_concentration",
-    "events_value_p95_by_type",
-    "events_value_quantile_rollup_by_type",
-    "lineitem_discount_band_profile",
-    "lineitem_key_skew_profile",
-    "lineitem_ols2_price_qty_discount",
-    "lineitem_ols_price_on_qty",
-    "lineitem_price_equidepth_bands",
-    "lineitem_price_percentiles_by_flag",
-    "lineitem_salted_agg_by_flag",
-    "lineitem_unpivot_measure_stats",
-    "minhash_estimate_qa",
-    "minhash_lsh_near_dups",
-    "minhash_recall_curve",
-    "minhash_signatures_sample",
-    "not_exists_insert_guard",
-    "orders_benford_first_digit",
-    "orders_bloom_prune_stats",
-    "orders_cohort_monthly_value",
-    "orders_customer_spend_gini",
-    "orders_expectation_report",
-    "orders_interarrival_stats",
-    "orders_monthly_growth",
-    "orders_open_backlog_by_day",
-    "orders_pareto_concentration",
-    "orders_rfm_segments",
-    "orders_trend_by_segment",
-    "parts_coorder_core_numbers",
-    "parts_coorder_kcore",
-    "parts_coorder_link_prediction",
-    "parts_coorder_pagerank",
-    "parts_coorder_ppr",
-    "parts_coorder_triangles",
-    "parts_supplier_concentration",
-    "profile_orders_columns",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_late_priority_counts",
-    "q13_customer_order_distribution",
-    "q14_promo_revenue",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_excess_shippers",
-    "q21_sole_late_supplier",
-    "q2_min_cost_supplier",
-    "q4_priority_late_ship",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "range_join_price_bands",
-    "ri_dangling_lineitems",
-    "scalar_array_funcs",
-    "scalar_bitwise_funcs",
-    "scalar_math_funcs",
-    "scalar_null_semantics",
-    "scd2_customer_history",
-    "simhash_fingerprints",
-    "simhash_near_pairs",
-    "snapshot_diff_counts",
-    "sql_catalog_roundtrip",
-    "sql_insert_not_exists",
-    "sql_lateral_top_orders",
-    "sql_recursive_cte_calendar",
-    "stats_corr_price_qty",
-    "stats_skew_kurtosis_qty",
-    "supplier_fulfillment_latency",
-    "validate_lineitem_fk_invalid",
-    "validate_lineitem_fk_summary",
-    "validate_orders_invalid",
-    "validate_orders_rejection_summary",
-    "validate_orders_split_stats",
-    "window_first_last_dense",
-    "window_percent_rank_cume",
-}
 
 
 def _ordered_names() -> list[str]:
     from lakehouse_architecture_spark.queries import QUERIES
-    from lakehouse_architecture_spark.queries.registry import MODULES
 
     names = [n for n in _SENTINELS + _PRIORITY if n in QUERIES]
-    seen = set(names)
-    for family in _FAMILY_ORDER:
-        for n in QUERIES:
-            if n not in seen and n not in _SECOND_TIER and MODULES.get(n) == family:
-                names.append(n)
-                seen.add(n)
-    names.extend(n for n in QUERIES if n not in seen)
-    return names
+    listed = set(names)
+    return names + [n for n in QUERIES if n not in listed]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

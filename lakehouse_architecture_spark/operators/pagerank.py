@@ -7,37 +7,37 @@ this extends the §2.11 LLM-pipeline surface (SURVEY.md) beyond the
 connected-components election (operators/components.py) to importance
 ranking on the same edge-relation representation.
 
-Per iteration (classic damped PageRank, Brin & Page 1998):
+One damped round loop, :func:`_damped_rounds`, runs all three public
+variants (Brin & Page 1998; Haveliwala 2002 for the personalized one):
 
-    pr_{t+1}(v) = (1-d) + d * [ Σ_{(u,v) in E} pr_t(u)/deg(u)
-                                + dangling_mass_t / n ]
+    pr_{t+1}(v) = (1-d)·s(v) + d·[ Σ_{(u,v,w)∈E} pr_t(u)·w/deg(u) + share_t(v) ]
 
-expressed as ONE edge-keyed join + ONE dst-keyed aggregate; the
-dangling mass (rank parked on nodes with no out-edges) rides the
-per-round 1-row certificate collect as a carried Python double (r17 —
-it used to be a per-round aggregate subtree + broadcast exchange
-inside every round's job), never a per-node collect. Ranks materialize
-each round via operators.iterative.loop_round (lineage truncation +
+They differ only in the edge weight (none, so w = 1 and ``deg``
+counts out-edges; or a column, ``wdeg`` = Σ w), the start and teleport
+vector s (1, or the seed measure ``sv``), the share of the dangling
+mass m, the rank parked on nodes without out-edges (m / n, or m · sv),
+and the column the ranks carry (``deg``, ``wdeg`` or ``sv``). A round
+is ONE edge-keyed join + ONE dst-keyed aggregate; m rides the round's
+1-row certificate collect as a carried Python double. Rounds
+materialize via operators.iterative.loop_round (lineage truncation +
 release of the superseded round's blocks; ``checkpoint_dir`` selects
 the executor-loss-safe reliable variant for cluster runs), so plan
-depth and executor storage both stay flat across iterations. With
-sum(pr_0) = n the update conserves total mass at n exactly (modulo
-float addition), which the QA query pins as an oracle boolean
-alongside the convergence residual.
+depth and executor storage stay flat. Total mass is conserved (n, or
+1 when seeded) modulo float addition; the QA queries pin it as an
+oracle boolean alongside the convergence residual.
 
-Exchange-free rounds (r13, the recipe measured on the core-numbers
-loop): the edge relation is hash-partitioned by ``dst`` ONCE and
-PERSISTED (an InMemoryRelation preserves outputPartitioning; a
-checkpointed LogicalRDD reports it unknown), and each round's share
-relation — node-grain, |V| known from the loop's own count — is
-explicitly BROADCAST while it fits (cap 2M rows). The contribution
-join then never exchanges the edge relation, its output stays
-dst-partitioned, and the dst aggregate runs in place: a round's heavy
-relation is SCANNED, not shuffled. Above the cap the join falls back
-to the plain shuffle pair, the 100 TB shape where each iteration
-shuffles |E| contribution rows with map-side partial aggregation on
-dst; iteration count is the convergence budget (10-20 dominates for
-web-like spectra), independent of corpus bytes.
+Exchange-free rounds (the recipe measured on the core-numbers loop):
+the edge relation is hash-partitioned by ``dst`` ONCE and PERSISTED
+(an InMemoryRelation preserves outputPartitioning; a checkpointed
+LogicalRDD reports it unknown), and each round's node-grain share
+relation is explicitly BROADCAST while |V| fits (cap 2M rows). The
+contribution join then never exchanges the edge relation, its output
+stays dst-partitioned, and the dst aggregate runs in place: a round's
+heavy relation is SCANNED, not shuffled. Above the cap the join falls
+back to the plain shuffle pair (each round shuffles |E| contribution
+rows, partially aggregated map-side on dst); iteration count is the
+convergence budget (10-20 dominates for web-like spectra),
+independent of corpus bytes.
 """
 
 from __future__ import annotations
@@ -46,6 +46,123 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.operators.iterative import loop_round
+
+
+def _dst_partitioned(
+    edges: DataFrame, src: str, dst: str, weight: str | None = None
+) -> DataFrame:
+    """``(src, dst)``, plus ``w`` when ``weight`` is given, partitioned
+    by ``dst`` and persisted (see module docstring); the caller
+    unpersists it. Unweighted edges carry no constant weight column."""
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    cols = [F.col(src).alias("src"), F.col(dst).alias("dst")]
+    if weight is not None:
+        cols.append(F.col(weight).cast("double").alias("w"))
+    return edges.select(*cols).repartition(n_part, "dst").persist()
+
+
+def _node_set(e: DataFrame, checkpoint_dir: str | None) -> tuple[DataFrame, int]:
+    """The checkpointed node set of ``e`` and its size. Raises
+    ``ValueError`` (after unpersisting ``e``) on a null endpoint: rank
+    sent to a null ``dst`` never joins back to a node, so mass would
+    vanish silently. The null count rides the aggregate that counts
+    the nodes, so the check costs no Spark action."""
+    ends = e.select(F.col("src").alias("node"))
+    ends = ends.unionByName(e.select(F.col("dst").alias("node")))
+    nodes = loop_round(ends.distinct(), checkpoint_dir=checkpoint_dir)
+    counts = nodes.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count_if(F.col("node").isNull()).alias("nulls"),
+    ).collect()[0]
+    if counts.nulls:
+        e.unpersist(blocking=False)
+        raise ValueError("PageRank requires non-null edge endpoints; found a null")
+    return nodes, counts.n
+
+
+def _damped_rounds(
+    e: DataFrame,
+    nodes: DataFrame,
+    n: int,
+    damping: float,
+    iters: int,
+    checkpoint_dir: str | None,
+    seeds: DataFrame | None = None,
+    n_seeds: int = 0,
+) -> tuple[DataFrame, float]:
+    """``iters`` damped rounds over ``e`` and its node set; unpersists
+    ``e``. A ``w`` column in ``e`` makes the loop weighted, ``seeds``
+    (``n_seeds`` graph nodes in a ``node`` column) personalized.
+    Returns (state: node, degree column[, sv], pr; delta_max)."""
+    weighted = "w" in e.columns
+    deg_col = "wdeg" if weighted else "deg"
+    out_degree = F.sum("w") if weighted else F.count(F.lit(1))
+    deg = e.groupBy("src").agg(out_degree.alias(deg_col))
+    # the degree rides with the rank relation so the per-round join is
+    # rank->edges only (nodes without out-edges carry degree 0 and
+    # contribute via the dangling term instead)
+    init = nodes.join(deg, nodes.node == deg.src, "left")
+    init_cols = [F.coalesce(deg_col, F.lit(0)).alias(deg_col)]
+    pr_0, teleport = F.lit(1.0), F.lit(1.0 - damping)
+    if seeds is not None:
+        seed_node = F.broadcast(seeds.select(F.col("node").alias("seed_node")))
+        init = init.join(seed_node, nodes.node == seed_node.seed_node, "left")
+        in_seeds = F.col("seed_node").isNotNull()
+        sv = F.when(in_seeds, F.lit(1.0) / F.lit(float(n_seeds))).otherwise(F.lit(0.0))
+        init_cols.append(sv.alias("sv"))
+        pr_0 = F.col("sv")
+        teleport = teleport * pr_0
+    init = init.select("node", *init_cols).withColumn("pr", pr_0)
+    state = loop_round(init, prev=nodes, checkpoint_dir=checkpoint_dir)
+    carried = state.columns[1:-1]  # the degree column[, sv]
+    bcast_share = n <= 2_000_000
+    delta_max = float("nan")
+    # state_cp is the round's CHECKPOINTED relation (the thing whose
+    # blocks loop_round can free once the next round materializes);
+    # state is at most a projection over it
+    state_cp = state
+    # the dangling mass m: one tiny aggregate over the checkpointed init
+    # for m_0, then a column of each round's certificate collect
+    mass = F.sum(F.when(F.col(deg_col) == 0, F.col("pr")))
+    mass = F.coalesce(mass, F.lit(0.0)).alias("m")
+    m = float(state.agg(mass).collect()[0].m)
+    delta = F.max(F.abs(F.col("pr") - F.col("pr_prev"))).alias("d")
+    for _ in range(iters):
+        # degree > 0 before the division: ANSI mode makes /0 an error,
+        # and dangling nodes contribute via the teleport term, not
+        # the edge join
+        share = state.filter(F.col(deg_col) > 0).select(
+            F.col("node").alias("src"),
+            (F.col("pr") / F.col(deg_col)).alias("share"),
+        )
+        flow = F.col("share") * F.col("w") if weighted else F.col("share")
+        contrib = (
+            e.join(F.broadcast(share) if bcast_share else share, "src")
+            .groupBy("dst")
+            .agg(F.sum(flow).alias("inflow"))
+        )
+        # m / n stays a division: m · (1/n) would move ranks by an ulp
+        if seeds is None:
+            dangling = F.lit(m) / F.lit(float(n))
+        else:
+            dangling = F.lit(m) * F.col("sv")
+        inflow = F.coalesce("inflow", F.lit(0.0))
+        new = state.join(contrib, state.node == contrib.dst, "left").select(
+            "node",
+            *carried,
+            (teleport + F.lit(damping) * (inflow + dangling)).alias("pr"),
+            F.col("pr").alias("pr_prev"),
+        )
+        new = loop_round(new, prev=state_cp, checkpoint_dir=checkpoint_dir)
+        cert = new.agg(delta, mass).collect()[0]
+        delta_max = float(cert.d)
+        m = float(cert.m)
+        state_cp = new
+        state = new.drop("pr_prev")
+    # state is a projection over the checkpointed final round; the
+    # edge cache is dead weight now
+    e.unpersist(blocking=False)
+    return state, delta_max
 
 
 def pagerank(
@@ -57,7 +174,8 @@ def pagerank(
     checkpoint_dir: str | None = None,
 ) -> dict:
     """Rank nodes of the directed graph ``edges`` (for an undirected
-    co-occurrence graph, pass both orientations of each pair).
+    co-occurrence graph, pass both orientations of each pair):
+    pr_0 = 1, uniform teleport, dangling share m / n.
 
     Returns ``{"ranks": DataFrame(node, pr), "n_nodes": int,
     "delta_max": float}`` — ``delta_max`` is the largest per-node
@@ -70,102 +188,11 @@ def pagerank(
         raise ValueError(f"damping must be in (0, 1): {damping}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1: {iters}")
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    # dst-partitioned + persisted: the per-round contribution join
-    # broadcasts the share side, so the edge relation is never
-    # exchanged again and the dst aggregate reuses this partitioning
-    # (see module docstring). Unpersisted before return.
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    nodes = loop_round(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_dir=checkpoint_dir,
-    )
-    n = nodes.count()
-    bcast_share = n <= 2_000_000
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # out-degree rides with the rank relation so the per-iteration join
-    # is rank->edges only (nodes without out-edges carry deg 0 and
-    # contribute via the dangling term instead)
-    state = loop_round(
-        nodes.join(deg, nodes.node == deg.src, "left")
-        .select("node", F.coalesce("deg", F.lit(0)).alias("deg"))
-        .withColumn("pr", F.lit(1.0)),
-        prev=nodes,
-        checkpoint_dir=checkpoint_dir,
-    )
-    delta_max = float("nan")
-    # state_cp is the round's CHECKPOINTED relation (the thing whose
-    # blocks loop_round can free once the next round materializes);
-    # state is at most a projection over it
-    state_cp = state
-    # Dangling mass rides the per-round 1-row certificate collect
-    # (r17, guide §1.2): the former per-round dangling SUBTREE (a scan
-    # of state + aggregate + broadcast exchange inside every round's
-    # job) is replaced by a Python double carried between rounds — the
-    # next round's update folds it in as a literal, numerically the
-    # same value the broadcast row held. m_0 is the dangling-node
-    # count (pr_0 = 1), one tiny aggregate over the checkpointed init.
-    m = float(
-        state.filter(F.col("deg") == 0)
-        .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m"))
-        .collect()[0]
-        .m
-    )
-    for _ in range(iters):
-        # deg > 0 before the division: ANSI mode makes /0 an error,
-        # and dangling nodes contribute via the teleport term, not
-        # the edge join
-        share = state.filter(F.col("deg") > 0).select(
-            F.col("node").alias("src"),
-            (F.col("pr") / F.col("deg")).alias("share"),
-        )
-        contrib = (
-            e.join(F.broadcast(share) if bcast_share else share, "src")
-            .groupBy("dst")
-            .agg(F.sum("share").alias("inflow"))
-        )
-        new = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.lit(m) / F.lit(float(n))
-                    )
-                ).alias("pr"),
-                F.col("pr").alias("pr_prev"),
-            )
-        )
-        new = loop_round(new, prev=state_cp, checkpoint_dir=checkpoint_dir)
-        cert = new.agg(
-            F.max(F.abs(F.col("pr") - F.col("pr_prev"))).alias("d"),
-            F.coalesce(
-                F.sum(F.when(F.col("deg") == 0, F.col("pr"))), F.lit(0.0)
-            ).alias("m"),
-        ).collect()[0]
-        delta_max = float(cert.d)
-        m = float(cert.m)
-        state_cp = new
-        state = new.drop("pr_prev")
-    # ranks is a projection over the checkpointed final round; the
-    # edge cache is dead weight now
-    e.unpersist(blocking=False)
-    return {
-        "ranks": state.select("node", "pr"),
-        "n_nodes": n,
-        "delta_max": delta_max,
-    }
+    e = _dst_partitioned(edges, src, dst)
+    nodes, n = _node_set(e, checkpoint_dir)
+    state, delta_max = _damped_rounds(e, nodes, n, damping, iters, checkpoint_dir)
+    ranks = state.select("node", "pr")
+    return {"ranks": ranks, "n_nodes": n, "delta_max": delta_max}
 
 
 def personalized_pagerank(
@@ -178,28 +205,17 @@ def personalized_pagerank(
     checkpoint_dir: str | None = None,
 ) -> dict:
     """Personalized PageRank (Haveliwala 2002, "Topic-sensitive
-    PageRank"): the teleport distribution concentrates on a SEED set
-    instead of being uniform, so rank mass diffuses outward from the
-    seeds through the graph — the seed-expansion primitive curation
-    pipelines use for data selection ("find everything related to this
-    trusted set") and recommendation ("products in the orbit of these
-    products").
+    PageRank"): the teleport concentrates on a SEED set, so rank mass
+    diffuses outward from the seeds — the seed-expansion primitive for
+    data selection ("everything related to this trusted set") and
+    recommendation ("products in the orbit of these products").
 
-        ppr_{t+1}(v) = (1-d)·s(v) + d·[ Σ_{(u,v)∈E} ppr_t(u)/deg(u)
-                                        + dangling_mass_t · s(v) ]
-
-    with ``s`` uniform over ``seeds`` (a DataFrame with a ``node``
-    column) and ppr_0 = s, so total mass is exactly 1 every round
-    (the damped update is measure-preserving with dangling mass
-    re-teleported to the seeds). Per-round cost is identical to
-    :func:`pagerank`: one edge-keyed join + one dst aggregate, rounds
-    materialized via :func:`operators.iterative.loop_round`.
-
-    Unlike the global variant, the iteration is a LINEAR fixed-depth
-    recurrence from a deterministic start, so a cross-engine oracle
-    can unroll the exact same T iterations in SQL and compare VALUES
-    (rounded, the double-summation-order allowance) — no
-    invariant-style certificates needed.
+    s = ``sv`` is uniform over ``seeds`` (a ``node`` column), ppr_0 = s
+    and dangling mass re-teleports to the seeds, so total mass is
+    exactly 1 every round. The recurrence is LINEAR and fixed-depth
+    from a deterministic start, so a cross-engine oracle can unroll the
+    same T iterations in SQL and compare VALUES (rounded, the
+    double-summation-order allowance), no invariant certificates needed.
 
     Returns ``{"ranks": DataFrame(node, sv, pr), "n_nodes", "n_seeds",
     "delta_max"}``.
@@ -208,108 +224,24 @@ def personalized_pagerank(
         raise ValueError(f"damping must be in (0, 1): {damping}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1: {iters}")
-    # same exchange-free round shape as :func:`pagerank`: dst-
-    # partitioned persisted edges + broadcast share under the cap
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    nodes = loop_round(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_dir=checkpoint_dir,
-    )
-    n = nodes.count()
-    bcast_share = n <= 2_000_000
-    # Normalize the seed set before it defines the teleport measure
-    # (r12 ADVICE): duplicates in ``seeds`` would duplicate node rows
-    # through the left join below, and a seed absent from the graph
-    # would silently shrink total teleport mass below 1 while still
-    # counting toward n_seeds. Dedup, then keep only seeds that are
-    # actual graph nodes, and recompute n_seeds from that set.
+    e = _dst_partitioned(edges, src, dst)
+    nodes, n = _node_set(e, checkpoint_dir)
+    # Normalize the seed set before it defines the teleport measure:
+    # duplicates in ``seeds`` would duplicate node rows through the
+    # loop's left join, and a seed absent from the graph would
+    # silently shrink total teleport mass below 1 while still counting
+    # toward n_seeds. Dedup, then keep only seeds that are actual graph
+    # nodes, and recompute n_seeds from that set.
     seed_set = seeds.select("node").distinct().join(nodes, "node", "semi")
     n_seeds = seed_set.count()
     if n_seeds < 1:
+        e.unpersist(blocking=False)
         raise ValueError("seeds must be non-empty and present in the graph")
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    sv = F.when(
-        F.col("seed_node").isNotNull(), F.lit(1.0) / F.lit(float(n_seeds))
-    ).otherwise(F.lit(0.0))
-    state = loop_round(
-        nodes.join(deg, nodes.node == deg.src, "left")
-        .join(
-            F.broadcast(seed_set.select(F.col("node").alias("seed_node"))),
-            nodes.node == F.col("seed_node"),
-            "left",
-        )
-        .select(
-            "node",
-            F.coalesce("deg", F.lit(0)).alias("deg"),
-            sv.alias("sv"),
-        )
-        .withColumn("pr", F.col("sv")),
-        prev=nodes,
-        checkpoint_dir=checkpoint_dir,
+    state, delta_max = _damped_rounds(
+        e, nodes, n, damping, iters, checkpoint_dir, seed_set, n_seeds
     )
-    delta_max = float("nan")
-    state_cp = state
-    # dangling mass as a carried Python double (r17) — same fold as
-    # :func:`pagerank`; m_0 = Σ sv over deg-0 nodes (pr_0 = sv)
-    m = float(
-        state.filter(F.col("deg") == 0)
-        .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m"))
-        .collect()[0]
-        .m
-    )
-    for _ in range(iters):
-        share = state.filter(F.col("deg") > 0).select(
-            F.col("node").alias("src"),
-            (F.col("pr") / F.col("deg")).alias("share"),
-        )
-        contrib = (
-            e.join(F.broadcast(share) if bcast_share else share, "src")
-            .groupBy("dst")
-            .agg(F.sum("share").alias("inflow"))
-        )
-        new = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .select(
-                "node",
-                "deg",
-                "sv",
-                (
-                    F.lit(1.0 - damping) * F.col("sv")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.lit(m) * F.col("sv")
-                    )
-                ).alias("pr"),
-                F.col("pr").alias("pr_prev"),
-            )
-        )
-        new = loop_round(new, prev=state_cp, checkpoint_dir=checkpoint_dir)
-        cert = new.agg(
-            F.max(F.abs(F.col("pr") - F.col("pr_prev"))).alias("d"),
-            F.coalesce(
-                F.sum(F.when(F.col("deg") == 0, F.col("pr"))), F.lit(0.0)
-            ).alias("m"),
-        ).collect()[0]
-        delta_max = float(cert.d)
-        m = float(cert.m)
-        state_cp = new
-        state = new.drop("pr_prev")
-    e.unpersist(blocking=False)
-    return {
-        "ranks": state.select("node", "sv", "pr"),
-        "n_nodes": n,
-        "n_seeds": n_seeds,
-        "delta_max": delta_max,
-    }
+    ranks = state.select("node", "sv", "pr")
+    return {"ranks": ranks, "n_nodes": n, "n_seeds": n_seeds, "delta_max": delta_max}
 
 
 def weighted_pagerank(
@@ -326,121 +258,32 @@ def weighted_pagerank(
     (contribution along (u, v, w) = pr(u) * w / wdeg(u), wdeg = sum of
     u's out-weights) — the production norm for co-occurrence graphs,
     where a pair co-ordered 40 times should pull rank harder than a
-    pair co-ordered once. Reduces exactly to :func:`pagerank` when all
-    weights are 1 (pinned by test). Deliberately a SEPARATE function:
-    the unweighted operator backs five standing oracle rows and stays
-    byte-unchanged.
-
-    Same exchange-free round shape as :func:`pagerank` (module
-    docstring): the weighted edge relation is dst-partitioned and
-    persisted, the node-grain share relation (pr / wdeg) broadcasts
-    under the 2M-node cap, and rounds materialize via ``loop_round``
-    (superseded-block release; ``checkpoint_dir`` for the reliable
-    cluster mode). Same update form as the unweighted operator
-    (sum-=-n normalization): pr <- (1-d) + d*(inflow + m/n) with m the
-    dangling mass (wdeg = 0 nodes).
+    pair co-ordered once. Otherwise :func:`pagerank`'s update, so it
+    reduces exactly to it when all weights are 1 (pinned by test).
+    Returns ``{"ranks": DataFrame(node, wdeg, pr), "n_nodes",
+    "delta_max"}``.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0, 1): {damping}")
     if iters < 1:
         raise ValueError(f"iters must be >= 1: {iters}")
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("w"),
-        )
-        .repartition(n_part, "dst")
-        .persist()
-    )
-    # Weight-sign guard (r14 ADVICE): w <= 0 silently corrupts the
-    # measure — a node whose out-weights sum to 0 despite having edges
-    # is misclassified as dangling, and a negative-wdeg node neither
-    # contributes nor counts as dangling, LEAKING rank mass with no
-    # error. NaN is neither null nor <= 0 in SQL comparisons yet
-    # poisons every downstream wdeg sum, so it gets its own predicate
-    # (r15 ADVICE). One limit(1) probe on the persisted edge relation
-    # (it materializes here anyway for the first round).
-    if (
-        e.filter(F.col("w").isNull() | F.isnan("w") | (F.col("w") <= 0))
-        .limit(1)
-        .count()
-        > 0
-    ):
+    e = _dst_partitioned(edges, src, dst, weight)
+    # Weight-sign guard: w <= 0 silently corrupts the measure — a node
+    # whose out-weights sum to 0 despite having edges is misclassified
+    # as dangling, and a negative-wdeg node neither contributes nor
+    # counts as dangling, LEAKING rank mass with no error. NaN is
+    # neither null nor <= 0 in SQL comparisons yet poisons every
+    # downstream wdeg sum, so it gets its own predicate. One limit(1)
+    # probe on the persisted edge relation, run before the node set
+    # (measured: after it, the probe costs one Spark job more).
+    bad = F.col("w").isNull() | F.isnan("w") | (F.col("w") <= 0)
+    if e.filter(bad).limit(1).count() > 0:
         e.unpersist(blocking=False)
         raise ValueError(
             "weighted_pagerank requires strictly positive edge "
             f"weights; found {weight} null, NaN, or <= 0"
         )
-    nodes = loop_round(
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct(),
-        checkpoint_dir=checkpoint_dir,
-    )
-    n = nodes.count()
-    bcast_share = n <= 2_000_000
-    wdeg = e.groupBy("src").agg(F.sum("w").alias("wdeg"))
-    state = loop_round(
-        nodes.join(wdeg, nodes.node == wdeg.src, "left")
-        .select("node", F.coalesce("wdeg", F.lit(0.0)).alias("wdeg"))
-        .withColumn("pr", F.lit(1.0)),
-        prev=nodes,
-        checkpoint_dir=checkpoint_dir,
-    )
-    delta_max = float("nan")
-    state_cp = state
-    # dangling mass as a carried Python double (r17) — same fold as
-    # :func:`pagerank`; m_0 is the wdeg-0 node count (pr_0 = 1)
-    m = float(
-        state.filter(F.col("wdeg") == 0.0)
-        .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("m"))
-        .collect()[0]
-        .m
-    )
-    for _ in range(iters):
-        share = state.filter(F.col("wdeg") > 0.0).select(
-            F.col("node").alias("src"),
-            (F.col("pr") / F.col("wdeg")).alias("share"),
-        )
-        contrib = (
-            e.join(F.broadcast(share) if bcast_share else share, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("share") * F.col("w")).alias("inflow"))
-        )
-        new = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .select(
-                "node",
-                "wdeg",
-                (
-                    F.lit(1.0 - damping)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("inflow", F.lit(0.0))
-                        + F.lit(m) / F.lit(float(n))
-                    )
-                ).alias("pr"),
-                F.col("pr").alias("pr_prev"),
-            )
-        )
-        new = loop_round(new, prev=state_cp, checkpoint_dir=checkpoint_dir)
-        cert = new.agg(
-            F.max(F.abs(F.col("pr") - F.col("pr_prev"))).alias("d"),
-            F.coalesce(
-                F.sum(F.when(F.col("wdeg") == 0.0, F.col("pr"))),
-                F.lit(0.0),
-            ).alias("m"),
-        ).collect()[0]
-        delta_max = float(cert.d)
-        m = float(cert.m)
-        state_cp = new
-        state = new.drop("pr_prev")
-    e.unpersist(blocking=False)
-    return {
-        "ranks": state.select("node", "wdeg", "pr"),
-        "n_nodes": n,
-        "delta_max": delta_max,
-    }
+    nodes, n = _node_set(e, checkpoint_dir)
+    state, delta_max = _damped_rounds(e, nodes, n, damping, iters, checkpoint_dir)
+    ranks = state.select("node", "wdeg", "pr")
+    return {"ranks": ranks, "n_nodes": n, "delta_max": delta_max}

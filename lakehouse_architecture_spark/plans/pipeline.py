@@ -82,7 +82,7 @@ def process_dataset(
     raw: DataFrame,
     schema: StructType,
     name: str,
-    primary_key: str,
+    primary_key: list[str],
     rules: list[Rule] | None = None,
     fk_rules: list[ForeignKeyRule] | None = None,
     job_name: str = "lakehouse-spark",
@@ -98,7 +98,7 @@ def process_dataset(
     # copy during the write for nothing. The raw frame underneath is a
     # batch-sized localCheckpoint from split_corrupt (lineage-truncated,
     # GC-released), which is what the recomputing consumers share.
-    clean = dedupe_by_key(valid, [primary_key], dedup_order)
+    clean = dedupe_by_key(valid, primary_key, dedup_order)
     rejected = with_rejection_audit(invalid, source=name, job_name=job_name)
     return DatasetResult(name=name, clean=clean, rejected=rejected)
 
@@ -145,7 +145,7 @@ def run_pipeline(
             raw,
             schema,
             name,
-            PRIMARY_KEYS[name],
+            [PRIMARY_KEYS[name]],
             rules=domain_rules.get(name),
             fk_rules=fk_rules,
             job_name=job_name,

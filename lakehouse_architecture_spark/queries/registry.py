@@ -23,7 +23,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
-MODULES: dict[str, str] = {}  # query name -> defining module (short name)
 
 
 def query(name: str, oracle: str | None = None):
@@ -31,7 +30,6 @@ def query(name: str, oracle: str | None = None):
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
-        MODULES[name] = fn.__module__.rsplit(".", 1)[-1]
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

@@ -7,8 +7,10 @@ Spark-native generalization is a file-source stream feeding the SAME
 batch MERGE through ``foreachBatch``, with watermarked windowed
 aggregation and stateful sessionization for the event table.
 
-Everything reuses the batch engine (validation rules, merge_upsert), so
-batch and streaming cannot drift apart — one code path, two drivers.
+Everything reuses the batch engine (the CSV ingest runs each micro-batch
+through the batch pipeline's ``process_dataset`` and ``merge_upsert``),
+so batch and streaming cannot drift apart — one code path, two entry
+points.
 """
 
 from __future__ import annotations
@@ -47,13 +49,16 @@ def stream_csv_ingest_merge(
     fk_rules=None,
     rejected_path: str | None = None,
 ):
-    """File-source stream -> validate -> MERGE upsert per micro-batch.
+    """File-source stream -> ``plans.pipeline.process_dataset`` (cast,
+    schema NotNull rules + ``rules``, PK dedup, rejection audit) -> MERGE
+    upsert per micro-batch, so a batch lands exactly as the batch
+    pipeline would land it.
 
     Late/duplicate data handling is the reference's: upsert on PK makes
     reprocessing idempotent. Run with ``trigger(availableNow=True)`` for
     catch-up batch semantics or default trigger for continuous tailing.
     """
-    from lakehouse_architecture_spark.operators.validation import validate
+    from lakehouse_architecture_spark.plans.pipeline import process_dataset
     from lakehouse_architecture_spark.sinks.writers import (
         append_rejected,
         merge_upsert,
@@ -66,11 +71,14 @@ def stream_csv_ingest_merge(
         .load(source_dir)
     )
 
+    # the rejection audit's ``source``, as the batch pipeline names it
+    table = os.path.basename(os.path.normpath(target_path))
+
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        valid, invalid = validate(batch_df, rules or [], fk_rules or [])
-        merge_upsert(spark, valid, target_path, keys, partition_by)
-        if rejected_path is not None and not invalid.isEmpty():
-            append_rejected(invalid, rejected_path, "stream_rejected")
+        res = process_dataset(batch_df, schema, table, keys, rules, fk_rules)
+        merge_upsert(spark, res.clean, target_path, keys, partition_by)
+        if rejected_path is not None and not res.rejected.isEmpty():
+            append_rejected(res.rejected, rejected_path, "stream_rejected")
 
     return (
         stream.writeStream.foreachBatch(handle_batch)

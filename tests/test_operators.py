@@ -337,36 +337,92 @@ def test_cms_validates_params(spark):
 # --- pagerank -----------------------------------------------------------
 
 
-def test_pagerank_matches_reference_iteration(spark):
-    from lakehouse_architecture_spark.operators.pagerank import pagerank
+# a small directed graph with a dangling node (4) and a hub (1); the
+# weights and seeds feed the weighted and personalized variants
+_PR_EDGES = [(1, 2), (1, 3), (2, 1), (3, 1), (3, 2), (2, 4), (5, 1)]
+_PR_WEIGHTS = [3.0, 1.0, 2.0, 5.0, 0.5, 1.0, 4.0]
+_PR_SEEDS = [1, 4]
 
-    # a small directed graph with a dangling node (4) and a hub (1)
-    edges = [(1, 2), (1, 3), (2, 1), (3, 1), (3, 2), (2, 4), (5, 1)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    r = pagerank(df, iters=12)
-    got = {row.node: row.pr for row in r["ranks"].collect()}
 
-    d = 0.85
-    nodes = sorted({u for e in edges for u in e})
+def _reference_pagerank(variant, d=0.85, iters=12):
+    """Pure-Python damped iteration, each variant's update written out."""
+    nodes = sorted({u for e in _PR_EDGES for u in e})
     n = len(nodes)
+    weights = _PR_WEIGHTS if variant == "weighted" else [1] * len(_PR_EDGES)
     out = {v: 0 for v in nodes}
-    for u, _v in edges:
-        out[u] += 1
-    pr = {v: 1.0 for v in nodes}
-    for _ in range(12):
+    for (u, _v), w in zip(_PR_EDGES, weights):
+        out[u] += w
+    if variant == "personalized":
+        s = {v: (1.0 / len(_PR_SEEDS) if v in _PR_SEEDS else 0.0) for v in nodes}
+        pr = dict(s)
+    else:
+        pr = {v: 1.0 for v in nodes}
+    for _ in range(iters):
         dang = sum(pr[v] for v in nodes if out[v] == 0)
         inflow = {v: 0.0 for v in nodes}
-        for u, v in edges:
-            inflow[v] += pr[u] / out[u]
-        pr = {v: (1 - d) + d * (inflow[v] + dang / n) for v in nodes}
+        for (u, v), w in zip(_PR_EDGES, weights):
+            inflow[v] += pr[u] / out[u] * w
+        if variant == "personalized":
+            pr = {v: (1 - d) * s[v] + d * (inflow[v] + dang * s[v]) for v in nodes}
+        else:
+            pr = {v: (1 - d) + d * (inflow[v] + dang / n) for v in nodes}
+    return pr
 
-    assert r["n_nodes"] == n
-    assert set(got) == set(pr)
-    assert all(abs(got[v] - pr[v]) < 1e-9 for v in pr)
-    # total mass conserved at n (teleport + dangling redistribution)
-    assert abs(sum(got.values()) - n) < 1e-9
+
+@pytest.mark.parametrize("variant", ["pagerank", "personalized", "weighted"])
+def test_pagerank_matches_reference_iteration(spark, variant):
+    """12 rounds of each variant equal the pure-Python iteration: uniform
+    teleport, seed teleport (sv) and weighted shares, each over a graph
+    with a dangling node."""
+    from lakehouse_architecture_spark.operators.pagerank import (
+        pagerank,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    rows = [e + (w,) for e, w in zip(_PR_EDGES, _PR_WEIGHTS)]
+    df = spark.createDataFrame(rows, "src long, dst long, w double")
+    if variant == "pagerank":
+        r = pagerank(df.drop("w"), iters=12)
+    elif variant == "personalized":
+        seeds = spark.createDataFrame([(v,) for v in _PR_SEEDS], "node long")
+        r = personalized_pagerank(df.drop("w"), seeds, iters=12)
+        assert r["n_seeds"] == len(_PR_SEEDS)
+    else:
+        r = weighted_pagerank(df, iters=12)
+    got = {row.node: row.pr for row in r["ranks"].collect()}
+    want = _reference_pagerank(variant)
+
+    assert r["n_nodes"] == len(want)
+    assert set(got) == set(want)
+    assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
+    # total mass conserved: n under the uniform teleport, 1 when seeded
+    mass = 1.0 if variant == "personalized" else len(want)
+    assert abs(sum(got.values()) - mass) < 1e-9
     # the hub out-ranks the dangling leaf
     assert got[1] > got[4]
+
+
+@pytest.mark.parametrize("variant", ["pagerank", "personalized", "weighted"])
+def test_pagerank_rejects_null_endpoints(spark, variant):
+    """Rank sent to a null dst never joins back to a node, so a null
+    endpoint would lose mass silently: every variant must refuse."""
+    from lakehouse_architecture_spark.operators.pagerank import (
+        pagerank,
+        personalized_pagerank,
+        weighted_pagerank,
+    )
+
+    for edges in ([(1, 2), (2, 1), (2, None), (3, 1)], [(None, 1), (1, 2)]):
+        df = spark.createDataFrame(edges, "src long, dst long")
+        with pytest.raises(ValueError, match="non-null edge endpoints"):
+            if variant == "pagerank":
+                pagerank(df, iters=2)
+            elif variant == "personalized":
+                seeds = spark.createDataFrame([(1,)], "node long")
+                personalized_pagerank(df, seeds, iters=2)
+            else:
+                weighted_pagerank(df.withColumn("w", F.lit(1.0)), iters=2)
 
 
 def test_pagerank_validates_params(spark):

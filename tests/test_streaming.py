@@ -223,6 +223,41 @@ def test_stream_ingest_merge_idempotent(spark, tmp_path):
     assert out == {501: 999.0, 503: 75.0}
 
 
+def test_stream_ingest_merge_matches_batch_pipeline(spark, tmp_path):
+    """A micro-batch lands as the batch pipeline lands it: the schema's
+    NotNull rules reject a null order_id (with the rejection audit
+    columns), and two rows for one order_id dedup to one."""
+    src = tmp_path / "incoming"
+    src.mkdir()
+    (src / "day1.csv").write_text(
+        CSV_HEADER
+        + "1,501,10,2025-04-01T10:00:00,100.0,2025-04-01\n"
+        + "2,501,10,2025-04-01T10:05:00,120.0,2025-04-01\n"
+        + "3,,11,2025-04-01T11:00:00,50.0,2025-04-01\n"
+    )
+    target = str(tmp_path / "orders")
+    rejected = str(tmp_path / "rejected")
+    q = stream_csv_ingest_merge(
+        spark,
+        str(src),
+        ORDERS_SCHEMA,
+        target,
+        keys=["order_id"],
+        partition_by="date",
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        rules=[PositiveRule("total_amount")],
+        rejected_path=rejected,
+    ).start()
+    _await(q)
+
+    curated = spark.read.parquet(target).collect()
+    assert [r.order_id for r in curated] == [501]
+    rej = spark.read.parquet(f"{rejected}/stream_rejected").collect()
+    assert len(rej) == 1
+    assert rej[0].order_num == 3 and rej[0].validation_errors == "Null order_id"
+    assert rej[0].source == "orders" and rej[0].rejection_time is not None
+
+
 def test_stream_hourly_counts_watermarked(spark, tmp_path):
     src = tmp_path / "events"
     src.mkdir()
