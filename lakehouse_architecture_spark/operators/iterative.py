@@ -42,21 +42,24 @@ from pyspark.sql import DataFrame
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor-storage blocks of a locally-checkpointed
-    DataFrame. Reaches the checkpointed RDD through the analyzed plan
-    (a ``LogicalRDD`` leaf — exactly what ``localCheckpoint``
-    returns); no-ops on anything else, and never lets a storage-layer
-    hiccup fail the loop that called it. After the free the DataFrame
-    is DEAD (its lineage was truncated, so the blocks cannot be
-    recomputed) — callers free only rounds they will never read
-    again."""
+    """Release the executor-storage blocks of every local checkpoint
+    ``df`` reads: the ``LogicalRDD`` leaves of its analyzed plan (a
+    ``localCheckpoint`` result is itself one, a filter over it has one).
+    No-ops on anything else, and never lets a storage-layer hiccup fail
+    the caller. After the free those checkpoints, and every DataFrame
+    over them, are DEAD (their lineage was truncated, so the blocks
+    cannot be recomputed) — callers free only what they will never read
+    again. Spark frees the blocks by itself only once the JVM collects
+    the checkpointed RDD, which an old-generation GC can put off for
+    many rounds or batches."""
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return
-        plan.rdd().unpersist(False)
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
     except Exception:
-        pass  # freeing is an optimization; never fail the loop
+        pass  # freeing is an optimization; never fail the caller
 
 
 def loop_round(

@@ -14,7 +14,9 @@ compiler. Semantics preserved exactly:
   shuffles, and the key set broadcasts when small);
 - errors collapsed with ``concat_ws('; ')`` only when non-empty, else NULL
   (src/etl_utils.py:176-180);
-- split into (valid, invalid) by error presence (src/etl_utils.py:185-187).
+- split into (valid, invalid) by error presence (src/etl_utils.py:185-187):
+  :func:`validate` returns the split, :func:`annotate` the frame before
+  it.
 
 Everything is a lazy Column expression — no driver-side collect anywhere
 (the v1 IN-list bug at /root/reference/src/glue_etl.py:125-147 is
@@ -151,16 +153,19 @@ def rules_from_schema(schema: StructType) -> list[Rule]:
     return [NotNullRule(f.name) for f in schema.fields if not f.nullable]
 
 
-def validate(
+def annotate(
     df: DataFrame,
     rules: list[Rule] | None = None,
     fk_rules: list[ForeignKeyRule] | None = None,
     error_col: str = ERROR_COL,
-) -> tuple[DataFrame, DataFrame]:
-    """Compile rules into one lazy plan; return ``(valid, invalid)``.
+) -> DataFrame:
+    """Compile rules into one lazy plan: ``df`` plus ``error_col``, the
+    row's violations '; '-joined in rule order, NULL on a valid row.
 
-    ``invalid`` carries ``error_col`` (string, '; '-joined in rule order);
-    ``valid`` has the source columns only.
+    Use this over :func:`validate` when both sides of the split are
+    consumed and the annotated frame is to be materialised once (the
+    pipeline's ``process_dataset``); the split is then two filters over
+    the materialised rows instead of two re-runs of the rules and joins.
     """
     rules = rules or []
     fk_rules = fk_rules or []
@@ -207,13 +212,27 @@ def validate(
             ).otherwise(F.col(ERROR_LIST_COL)),
         ).drop(marker)
 
-    out = out.withColumn(
+    return out.withColumn(
         error_col,
         F.when(
             F.size(ERROR_LIST_COL) > 0, F.concat_ws("; ", F.col(ERROR_LIST_COL))
         ).otherwise(F.lit(None).cast("string")),
     ).drop(ERROR_LIST_COL)
 
+
+def validate(
+    df: DataFrame,
+    rules: list[Rule] | None = None,
+    fk_rules: list[ForeignKeyRule] | None = None,
+    error_col: str = ERROR_COL,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`annotate` split lazily into ``(valid, invalid)``.
+
+    ``invalid`` carries ``error_col`` (string, '; '-joined in rule order);
+    ``valid`` has the source columns only. Each side re-runs the rules
+    and FK joins on its own action.
+    """
+    out = annotate(df, rules, fk_rules, error_col)
     valid = out.filter(F.col(error_col).isNull()).drop(error_col)
     invalid = out.filter(F.col(error_col).isNotNull())
     return valid, invalid

@@ -7,34 +7,43 @@ and src/glue_etl.py:216-391) and the Step Functions outer lifecycle
 (/root/reference/stepfunctions/delta-lake.json) as one lazy-plan driver.
 
 Deliberate departures, per SURVEY.md §4's bug list:
-- no per-stage ``count()`` actions for logging (they re-execute lineage);
-  the stats are one count of the rejected frame, which also gates its
-  append, and a count and LIMIT-5 probe of the curated zone read back
-  after the MERGE;
+- no per-stage ``count()`` actions for logging (they re-execute lineage):
+  each batch is evaluated by ONE Spark action, and its rejected count is
+  an ``observe()`` metric on that action; the curated row count is read
+  from the written zone's parquet footers on the driver, and one
+  LIMIT-5 probe reads the zone back after the MERGE;
 - deterministic dedup (row_number over PK with a defined ordering) instead
   of ``dropDuplicates``;
-- materialisation only where a frame genuinely fans out: the raw batch
-  under the valid/invalid split is a ``localCheckpoint`` taken in
-  ``sources.readers.split_corrupt`` (``valid`` itself is never cached),
-  and the curated RI reference dims are held in one-slot persists
-  (``operators.caching``).
+- materialisation only where a frame genuinely fans out: the validated
+  batch (rules and FK joins evaluated, errors annotated) is one
+  batch-sized ``localCheckpoint`` that the MERGE, the rejected append and
+  the counts all read, the raw CSV under it is the lazy checkpoint taken
+  in ``sources.readers.split_corrupt`` (both freed by ``run_pipeline``,
+  not left to the JVM's GC), and the curated dims a later table FK-joins
+  are held in one-slot persists (``operators.caching``).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType, TimestampType
 
 from lakehouse_architecture_spark.operators.dedup import dedupe_by_key
-from lakehouse_architecture_spark.operators.validation import (
+from lakehouse_architecture_spark.operators.caching import one_slot_persist
+from lakehouse_architecture_spark.operators.iterative import _free_local_checkpoint
+from lakehouse_architecture_spark.operators.validation import (  # noqa: F401
+    ERROR_COL,
     ForeignKeyRule,
     Rule,
+    annotate,
     rules_from_schema,
-    validate,
+    validate,  # kept bound: perfbench/workloads.install_tracing patches it
     with_rejection_audit,
 )
 from lakehouse_architecture_spark.schemas import (
@@ -43,10 +52,19 @@ from lakehouse_architecture_spark.schemas import (
     SCHEMAS,
 )
 from lakehouse_architecture_spark.sinks.writers import (
+    _data_files,
     append_rejected,
     merge_upsert,
 )
 from lakehouse_architecture_spark.sources.readers import read_csv_typed, split_corrupt
+
+
+# RI edges of the reference's model: table -> [(column, referenced table)],
+# the column named alike on both sides, in rule order
+# (/root/reference/src/glue_etl.py:443-535).
+_FOREIGN_KEYS = {
+    "order_items": [("order_id", "orders"), ("product_id", "products")],
+}
 
 
 def cast_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
@@ -88,19 +106,36 @@ def process_dataset(
     job_name: str = "lakehouse-spark",
     dedup_order: list[Column] | None = None,
 ) -> DatasetResult:
-    """cast -> validate -> audit rejected -> deterministic PK dedup."""
+    """cast -> validate -> audit rejected -> deterministic PK dedup.
+
+    The annotated batch (cast, rules and FK joins evaluated) is
+    materialised by one eager ``localCheckpoint``, the batch's only
+    Spark action; ``clean`` and ``rejected`` are filters over those rows,
+    so the MERGE and the rejected append never re-run the rules or the
+    joins. ``stats["rejected_rows"]`` is an ``observe()`` metric of that
+    action. The checkpoint is batch-sized; Spark frees it when the JVM
+    collects it, and ``run_pipeline`` and the streaming ingest free it
+    explicitly once the batch is written (see
+    ``sources.readers.split_corrupt`` for the durability caveat on
+    clusters)."""
     typed = cast_to_schema(raw, schema)
     all_rules = rules_from_schema(schema) + list(rules or [])
-    valid, invalid = validate(typed, all_rules, fk_rules)
-    # No cache on `valid`: its only consumer is the dedup -> MERGE write
-    # (stats read the WRITTEN parquet back, and the rejected side derives
-    # from `invalid`), so materializing it would cost a full in-memory
-    # copy during the write for nothing. The raw frame underneath is a
-    # batch-sized localCheckpoint from split_corrupt (lineage-truncated,
-    # GC-released), which is what the recomputing consumers share.
+    annotated = annotate(typed, all_rules, fk_rules)
+    # unique per call: products and orders run in two threads of one session
+    obs = Observation(f"{name}-rejected-{uuid.uuid4().hex}")
+    batch = annotated.observe(
+        obs, F.count(F.col(ERROR_COL)).alias("rejected_rows")
+    ).localCheckpoint(eager=True)
+    valid = batch.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
+    invalid = batch.filter(F.col(ERROR_COL).isNotNull())
     clean = dedupe_by_key(valid, primary_key, dedup_order)
     rejected = with_rejection_audit(invalid, source=name, job_name=job_name)
-    return DatasetResult(name=name, clean=clean, rejected=rejected)
+    return DatasetResult(
+        name=name,
+        clean=clean,
+        rejected=rejected,
+        stats={"rejected_rows": obs.get["rejected_rows"]},
+    )
 
 
 def run_pipeline(
@@ -115,6 +150,10 @@ def run_pipeline(
     in dependency order, /root/reference/src/glue_etl.py:443-535), ending
     with post-write LIMIT-5 probes (the Athena validation step,
     stepfunctions/delta-lake.json:147-215).
+
+    Each table's checkpoints are freed once the table is written, so the
+    results carry its stats but their ``clean`` and ``rejected`` frames
+    can no longer be acted on: read the zones for the rows.
     """
     if domain_rules is None:
         # the reference's built-in domain rule: total_amount must be > 0
@@ -124,22 +163,23 @@ def run_pipeline(
         domain_rules = {"orders": [PositiveRule("total_amount")]}
     results: dict[str, DatasetResult] = {}
     reference: dict[str, DataFrame] = {}
+    # only a table a later table FK-joins is persisted as a reference: a
+    # persist nothing reads would still be filled by any later read of the
+    # same zone (Spark's cache matches plans), e.g. the post-job SQL
+    referenced = {
+        ref for t in raw_paths for _, ref in _FOREIGN_KEYS.get(t, [])
+    }
 
     def run_table(name: str) -> DatasetResult:
         schema = SCHEMAS[name]
         raw = read_csv_typed(spark, raw_paths[name], schema)
         raw, _corrupt = split_corrupt(raw)
 
-        fk_rules = []
-        if name == "order_items":
-            if "orders" in reference:
-                fk_rules.append(
-                    ForeignKeyRule("order_id", reference["orders"], "order_id")
-                )
-            if "products" in reference:
-                fk_rules.append(
-                    ForeignKeyRule("product_id", reference["products"], "product_id")
-                )
+        fk_rules = [
+            ForeignKeyRule(col, reference[ref], col)
+            for col, ref in _FOREIGN_KEYS.get(name, [])
+            if ref in reference
+        ]
 
         res = process_dataset(
             raw,
@@ -151,41 +191,37 @@ def run_pipeline(
             job_name=job_name,
         )
 
+        path = os.path.join(curated_base, name)
         merge_upsert(
-            spark,
-            res.clean,
-            os.path.join(curated_base, name),
-            [PRIMARY_KEYS[name]],
+            spark, res.clean, path, [PRIMARY_KEYS[name]],
             partition_by=PARTITION_COLUMNS[name],
         )
-        # One count serves both the emptiness gate and the stats row —
-        # isEmpty() would be a second action over the same rejected
-        # lineage (rule evaluation + FK joins re-run per action).
-        n_rejected = res.rejected.count()
-        if n_rejected:
+        if res.stats["rejected_rows"]:
             append_rejected(res.rejected, rejected_base, name)
 
         # Plain read, not sources.readers.read_parquet: every cycle adds a
         # date partition, so its footer-keyed schema memo would never hit
         # and every read would walk the footers for nothing.
-        curated = spark.read.parquet(os.path.join(curated_base, name))
-        res.stats = {
-            "clean_rows": curated.count(),
-            "rejected_rows": n_rejected,
-            # post-write probe (Athena LIMIT 5 step)
-            "probe_rows": len(curated.limit(5).collect()),
-        }
-        # one-slot per table (operators/caching): the curated reference
-        # must stay warm within THIS run (later tables FK-join it), and
-        # the next run's same-named slot releases it — repeated pipeline
-        # runs in one session no longer accumulate cached tables
-        from lakehouse_architecture_spark.operators.caching import (
-            one_slot_persist,
+        curated = spark.read.parquet(path)
+        # summed from the footers on the driver, no Spark job (the
+        # writers take local paths only)
+        res.stats["clean_rows"] = sum(
+            pq.read_metadata(f).num_rows for f in _data_files(path)
         )
-
-        reference[name] = one_slot_persist(
-            curated, slot=f"pipeline-ref-{name}"
-        )
+        # post-write probe (Athena LIMIT 5 step)
+        res.stats["probe_rows"] = len(curated.limit(5).collect())
+        if name in referenced:
+            # one slot per table (operators/caching): warm for the later
+            # table's FK joins in THIS run, released by the next run's
+            # same-named slot, so repeated runs in one session do not
+            # accumulate cached tables
+            reference[name] = one_slot_persist(
+                curated, slot=f"pipeline-ref-{name}"
+            )
+        # the table is written: free its raw and batch checkpoints now,
+        # not when the JVM's GC collects them, which can be many runs later
+        _free_local_checkpoint(raw)
+        _free_local_checkpoint(res.clean)
         return res
 
     # products and orders have no dependency on each other — only

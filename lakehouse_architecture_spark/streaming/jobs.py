@@ -58,6 +58,9 @@ def stream_csv_ingest_merge(
     reprocessing idempotent. Run with ``trigger(availableNow=True)`` for
     catch-up batch semantics or default trigger for continuous tailing.
     """
+    from lakehouse_architecture_spark.operators.iterative import (
+        _free_local_checkpoint,
+    )
     from lakehouse_architecture_spark.plans.pipeline import process_dataset
     from lakehouse_architecture_spark.sinks.writers import (
         append_rejected,
@@ -77,8 +80,9 @@ def stream_csv_ingest_merge(
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         res = process_dataset(batch_df, schema, table, keys, rules, fk_rules)
         merge_upsert(spark, res.clean, target_path, keys, partition_by)
-        if rejected_path is not None and not res.rejected.isEmpty():
+        if rejected_path is not None and res.stats["rejected_rows"]:
             append_rejected(res.rejected, rejected_path, "stream_rejected")
+        _free_local_checkpoint(res.clean)  # the micro-batch is written
 
     return (
         stream.writeStream.foreachBatch(handle_batch)

@@ -10,12 +10,16 @@ import os
 
 from pyspark.sql import functions as F
 
+from lakehouse_architecture_spark.operators import caching
+from lakehouse_architecture_spark.operators.validation import ForeignKeyRule
 from lakehouse_architecture_spark.plans.pipeline import (
     cast_to_schema,
+    process_dataset,
     run_pipeline,
 )
-from lakehouse_architecture_spark.schemas import ORDERS_SCHEMA
+from lakehouse_architecture_spark.schemas import ORDER_ITEMS_SCHEMA, ORDERS_SCHEMA
 from lakehouse_architecture_spark.sinks.writers import merge_upsert
+from lakehouse_architecture_spark.sources.readers import read_csv_typed
 
 PRODUCTS_CSV = "product_id,department_id,department,product_name\n"
 ORDERS_CSV = "order_num,order_id,user_id,order_timestamp,total_amount,date\n"
@@ -57,6 +61,19 @@ def _raw_paths(tmp):
             ],
         ),
     }
+
+
+def _checkpoint_rdd_ids(df):
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.length())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def _stored_rdd_ids(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
 
 def test_cast_to_schema_nulls_uncastable(spark):
@@ -101,15 +118,60 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, tmp_path):
         "Invalid product_id reference",
     }
 
+    # only the tables order_items FK-joins stay persisted as references
+    assert "pipeline-ref-products" in caching._SLOTS
+    assert "pipeline-ref-orders" in caching._SLOTS
+    assert "pipeline-ref-order_items" not in caching._SLOTS
+
     # partition layout on disk (date=... directories)
     parts = os.listdir(os.path.join(curated, "orders"))
     assert any(p.startswith("date=") for p in parts)
+
+    # each table's batch checkpoint is freed once the table is written
+    batches = set().union(*(_checkpoint_rdd_ids(r.clean) for r in results.values()))
+    assert len(batches) == 3 and not batches & _stored_rdd_ids(spark)
 
     # re-run same inputs: MERGE keeps counts stable (idempotency)
     results2 = run_pipeline(spark, raw, curated, rejected)
     assert results2["orders"].stats["clean_rows"] == 2
     assert results2["products"].stats["clean_rows"] == 2
     assert results2["order_items"].stats["clean_rows"] == 2
+
+
+def test_process_dataset_evaluates_the_batch_once(spark, tmp_path):
+    """The cast, the rules and the FK joins run in one action: the
+    clean and rejected frames read its materialised rows, and the
+    rejected count is observed on it."""
+    path = _write(
+        tmp_path, "order_items", ITEMS_CSV,
+        [
+            "1,501,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01",
+            "2,501,1990,10,2,2,0,2025-04-01T11:27:00,2025-04-01",
+            "2,501,1990,10,2,3,0,2025-04-01T11:28:00,2025-04-01",  # dup PK
+            "3,999,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01",  # bad FK order
+            "4,502,1991,,999,1,0,2025-04-01T12:00:00,2025-04-01",  # bad FK product
+            ",501,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01",  # null PK
+        ],
+    )
+    orders = spark.createDataFrame([(501,), (502,)], "order_id int")
+    products = spark.createDataFrame([(1,), (2,)], "product_id int")
+    res = process_dataset(
+        read_csv_typed(spark, path, ORDER_ITEMS_SCHEMA),
+        ORDER_ITEMS_SCHEMA,
+        "order_items",
+        ["id"],
+        fk_rules=[
+            ForeignKeyRule("order_id", orders, "order_id"),
+            ForeignKeyRule("product_id", products, "product_id"),
+        ],
+    )
+    for df in (res.clean, res.rejected):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "csv" not in plan.lower() and "Join" not in plan, plan
+
+    assert res.stats["rejected_rows"] == res.rejected.count() == 3
+    assert sorted(r.id for r in res.clean.collect()) == [1, 2]
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
@@ -149,7 +211,8 @@ def test_pipeline_over_many_date_partitions_launches_no_listing_job(
     """Past 32 partition directories Spark lists a table with a job of
     its own (one task per directory) unless it lists on the driver,
     which ``get_spark`` sets for a local master. A daily curated zone
-    passes 32 dates after a month: no read of it may list by job."""
+    passes 32 dates after a month: no read of it may list by job. The
+    cycle's footer-read ``clean_rows`` must match a read of the zone."""
     dates = [dt.date(2025, 1, 1) + dt.timedelta(days=i) for i in range(40)]
     history = tmp_path / "history"
     history.mkdir()
@@ -185,9 +248,15 @@ def test_pipeline_over_many_date_partitions_launches_no_listing_job(
             [f"90,600,1,1,1,1,0,{new}T10:00:00,{new}"],
         ),
     }
-    jobs = jobs_launched(lambda: run_pipeline(spark, raw, curated, rejected))
+    out = []
+    jobs = jobs_launched(lambda: out.append(run_pipeline(spark, raw, curated, rejected)))
     assert jobs, "the cycle launched no job at all: nothing was counted"
     assert [j for j in jobs if j.startswith("Listing leaf files")] == []
+
+    # clean_rows is read from the footers of the zone the MERGE rewrote
+    for name, res in out[0].items():
+        zone = spark.read.parquet(os.path.join(curated, name))
+        assert res.stats["clean_rows"] == zone.count(), name
 
     orders = {
         r.order_id: r.total_amount

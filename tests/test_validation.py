@@ -15,10 +15,12 @@ from pyspark.sql.types import (
 )
 
 from lakehouse_architecture_spark.operators.validation import (
+    ERROR_COL,
     ForeignKeyRule,
     NotNullRule,
     PositiveRule,
     RangeRule,
+    annotate,
     rejection_summary,
     rules_from_schema,
     validate,
@@ -125,6 +127,47 @@ def test_fk_dangling_references(spark):
     assert both.validation_errors == (
         "Invalid order_id reference; Invalid product_id reference"
     )
+
+
+@pytest.mark.parametrize("case", ["rule_order", "fk_dangling"])
+def test_annotate_then_split_equals_validate(spark, case):
+    if case == "rule_order":
+        df = spark.createDataFrame(
+            [(None, None, -5.0), (1, 10, 100.0), (2, None, 0.0)], LOOSE_ORDERS
+        )
+        rules = [
+            NotNullRule("order_id"),
+            NotNullRule("user_id"),
+            PositiveRule("total_amount"),
+        ]
+        fks = []
+    else:
+        df = spark.createDataFrame(
+            [(1, 501, 101), (2, 999, 101), (3, 501, 999), (4, 999, 999),
+             (5, None, 101)],
+            LOOSE_ITEMS,
+        )
+        rules = [NotNullRule("id")]
+        fks = [
+            ForeignKeyRule(
+                "order_id", spark.createDataFrame([(501,)], "order_id int"),
+                "order_id",
+            ),
+            ForeignKeyRule(
+                "product_id", spark.createDataFrame([(101,)], "product_id int"),
+                "product_id",
+            ),
+        ]
+
+    def rows(d):
+        return sorted((tuple(r) for r in d.collect()), key=repr)
+
+    out = annotate(df, rules, fks)
+    valid, invalid = validate(df, rules, fks)
+    assert out.columns == invalid.columns == df.columns + [ERROR_COL]
+    assert rows(out.filter(out[ERROR_COL].isNull()).drop(ERROR_COL)) == rows(valid)
+    assert rows(out.filter(out[ERROR_COL].isNotNull())) == rows(invalid)
+    assert invalid.count() > 0 and valid.count() > 0
 
 
 def test_fk_null_is_not_a_fk_violation(spark):
