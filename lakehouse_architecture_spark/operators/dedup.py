@@ -18,6 +18,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def default_dedup_order(columns: list[str], keys: list[str]) -> list[Column]:
+    """:func:`dedupe_by_key`'s default ordering over a frame with
+    ``columns``: every non-key column ascending, nulls last."""
+    order = [F.col(c).asc_nulls_last() for c in columns if c not in keys]
+    return order or [F.lit(1).asc()]
+
+
 def dedupe_by_key(
     df: DataFrame,
     keys: list[str],
@@ -37,9 +44,7 @@ def dedupe_by_key(
     The window also partial-sorts only, never spills at this width, and
     keeps the plan identical for callers that pass explicit orderings."""
     if order_by is None:
-        order_by = [F.col(c).asc_nulls_last() for c in df.columns if c not in keys]
-        if not order_by:
-            order_by = [F.lit(1).asc()]
+        order_by = default_dedup_order(df.columns, keys)
     w = Window.partitionBy(*keys).orderBy(*order_by)
     return (
         df.withColumn("_dedup_rn", F.row_number().over(w))

@@ -8,19 +8,23 @@ and src/glue_etl.py:216-391) and the Step Functions outer lifecycle
 
 Deliberate departures, per SURVEY.md §4's bug list:
 - no per-stage ``count()`` actions for logging (they re-execute lineage):
-  each batch is evaluated by ONE Spark action, and its rejected count is
-  an ``observe()`` metric on that action; the curated row count is read
-  from the written zone's parquet footers on the driver, and one
-  LIMIT-5 probe reads the zone back after the MERGE;
+  each batch is evaluated by ONE Spark action, and its row accounting
+  (raw, corrupt, rejected and dedup-dropped rows) and the partition
+  values the MERGE rewrites are ``observe()`` metrics on that action;
+  the curated row count is read from the written zone's parquet footers
+  on the driver, and one LIMIT-5 probe reads the zone back after the
+  MERGE;
 - deterministic dedup (row_number over PK with a defined ordering) instead
-  of ``dropDuplicates``;
-- materialisation only where a frame genuinely fans out: the validated
-  batch (rules and FK joins evaluated, errors annotated) is one
-  batch-sized ``localCheckpoint`` that the MERGE, the rejected append and
-  the counts all read, the raw CSV under it is the lazy checkpoint taken
-  in ``sources.readers.split_corrupt`` (both freed by ``run_pipeline``,
-  not left to the JVM's GC), and the curated dims a later table FK-joins
-  are held in one-slot persists (``operators.caching``).
+  of ``dropDuplicates``, evaluated inside that same action;
+- materialisation only where a frame genuinely fans out: the batch (the
+  raw CSV cast, rules and FK joins evaluated, errors annotated, PK rows
+  ranked) is one batch-sized ``localCheckpoint`` that the MERGE and the
+  rejected append read as filters, freed by ``run_pipeline`` rather
+  than left to the JVM's GC; the raw CSV under it is not checkpointed,
+  since its corrupt rows are only counted and dropped
+  (``sources.readers.split_corrupt`` remains for callers that keep
+  them); and the curated dims a later table FK-joins are held in
+  one-slot persists (``operators.caching``).
 """
 
 from __future__ import annotations
@@ -30,11 +34,14 @@ import uuid
 from dataclasses import dataclass, field
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, TimestampType
+from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
-from lakehouse_architecture_spark.operators.dedup import dedupe_by_key
+from lakehouse_architecture_spark.operators.dedup import (  # noqa: F401
+    dedupe_by_key,  # kept bound: perfbench/workloads.install_tracing patches it
+    default_dedup_order,
+)
 from lakehouse_architecture_spark.operators.caching import one_slot_persist
 from lakehouse_architecture_spark.operators.iterative import _free_local_checkpoint
 from lakehouse_architecture_spark.operators.validation import (  # noqa: F401
@@ -56,7 +63,14 @@ from lakehouse_architecture_spark.sinks.writers import (
     append_rejected,
     merge_upsert,
 )
-from lakehouse_architecture_spark.sources.readers import read_csv_typed, split_corrupt
+from lakehouse_architecture_spark.sources.readers import (  # noqa: F401
+    CORRUPT_COL,
+    read_csv_typed,
+    split_corrupt,  # kept bound: perfbench/workloads.install_tracing patches it
+)
+
+# the batch's per-PK row rank; rank 1 of a valid row is the row kept
+_RANK_COL = "_dedup_rn"
 
 
 # RI edges of the reference's model: table -> [(column, referenced table)],
@@ -94,6 +108,9 @@ class DatasetResult:
     clean: DataFrame
     rejected: DataFrame
     stats: dict = field(default_factory=dict)
+    # clean's distinct (value, value cast to string) partition pairs as
+    # Rows, merge_upsert's ``partitions``; None without a partition column
+    partitions: list | None = None
 
 
 def process_dataset(
@@ -105,36 +122,81 @@ def process_dataset(
     fk_rules: list[ForeignKeyRule] | None = None,
     job_name: str = "lakehouse-spark",
     dedup_order: list[Column] | None = None,
+    partition_by: str | None = None,
 ) -> DatasetResult:
-    """cast -> validate -> audit rejected -> deterministic PK dedup.
+    """cast -> validate -> audit rejected -> deterministic PK dedup, in
+    one Spark action; rows ``raw`` captured in ``_corrupt_record`` (a
+    ``sources.readers`` typed read) are counted and dropped.
 
-    The annotated batch (cast, rules and FK joins evaluated) is
+    The batch (cast, rules and FK joins evaluated, every row ranked
+    within its PK, valid rows first and then by ``dedup_order``) is
     materialised by one eager ``localCheckpoint``, the batch's only
-    Spark action; ``clean`` and ``rejected`` are filters over those rows,
-    so the MERGE and the rejected append never re-run the rules or the
-    joins. ``stats["rejected_rows"]`` is an ``observe()`` metric of that
-    action. The checkpoint is batch-sized; Spark frees it when the JVM
-    collects it, and ``run_pipeline`` and the streaming ingest free it
-    explicitly once the batch is written (see
+    Spark action. ``clean`` (the valid rows ranked first, exactly the
+    rows ``dedupe_by_key`` keeps of the valid rows) and ``rejected``
+    are filters over those rows, so the MERGE and the rejected append
+    never re-run the rules, the joins or the dedup.
+
+    ``stats`` holds ``observe()`` metrics of that action:
+    ``raw_rows``, ``corrupt_rows``, ``rejected_rows`` and
+    ``dedup_dropped_rows`` (valid rows that lost the PK dedup), so
+    ``raw = corrupt + rejected + clean + dedup_dropped``. With
+    ``partition_by``, ``partitions`` holds ``clean``'s distinct
+    partition values in ``merge_upsert``'s form, observed on the same
+    action. The checkpoint is batch-sized; Spark
+    frees it when the JVM collects it, and ``run_pipeline`` and the
+    streaming ingest free it explicitly once the batch is written (see
     ``sources.readers.split_corrupt`` for the durability caveat on
     clusters)."""
-    typed = cast_to_schema(raw, schema)
+    # the corrupt-record column rides the cast (all null for a source
+    # that does not capture one) and corrupt rows ride the action, to be
+    # counted on it: an observe() on the raw frame below the dedup's
+    # shuffle is lost when adaptive execution replaces an empty stage
+    # (all rows corrupt, or none at all) by an empty relation
+    typed = cast_to_schema(
+        raw, StructType(schema.fields + [StructField(CORRUPT_COL, StringType())])
+    )
     all_rules = rules_from_schema(schema) + list(rules or [])
     annotated = annotate(typed, all_rules, fk_rules)
+    parsed = F.col(CORRUPT_COL).isNull()
+    invalid = parsed & F.col(ERROR_COL).isNotNull()
+    valid = parsed & F.col(ERROR_COL).isNull()
+    order = dedup_order or default_dedup_order(schema.fieldNames(), primary_key)
+    rank = F.row_number().over(
+        Window.partitionBy(*primary_key).orderBy(~valid, *order)
+    )
+    kept = valid & (F.col(_RANK_COL) == 1)
+    metrics = [
+        F.count(F.lit(1)).alias("raw_rows"),
+        F.count(F.col(CORRUPT_COL)).alias("corrupt_rows"),
+        F.count_if(invalid).alias("rejected_rows"),
+        F.count_if(valid & (F.col(_RANK_COL) > 1)).alias("dedup_dropped_rows"),
+    ]
+    if partition_by:
+        part = F.col(partition_by)
+        # a struct, not the bare value: collect_set skips nulls, and a
+        # null partition value is a partition the MERGE must rewrite
+        pair = F.struct(part.alias("value"), part.cast("string").alias("string"))
+        metrics.append(F.collect_set(F.when(kept, pair)).alias("partitions"))
     # unique per call: products and orders run in two threads of one session
-    obs = Observation(f"{name}-rejected-{uuid.uuid4().hex}")
-    batch = annotated.observe(
-        obs, F.count(F.col(ERROR_COL)).alias("rejected_rows")
-    ).localCheckpoint(eager=True)
-    valid = batch.filter(F.col(ERROR_COL).isNull()).drop(ERROR_COL)
-    invalid = batch.filter(F.col(ERROR_COL).isNotNull())
-    clean = dedupe_by_key(valid, primary_key, dedup_order)
-    rejected = with_rejection_audit(invalid, source=name, job_name=job_name)
+    obs = Observation(f"{name}-batch-{uuid.uuid4().hex}")
+    batch = (
+        annotated.withColumn(_RANK_COL, rank)
+        .observe(obs, *metrics)
+        .localCheckpoint(eager=True)
+    )
+    clean = batch.filter(kept).drop(ERROR_COL, _RANK_COL, CORRUPT_COL)
+    rejected = with_rejection_audit(
+        batch.filter(invalid).drop(_RANK_COL, CORRUPT_COL),
+        source=name,
+        job_name=job_name,
+    )
+    stats = obs.get
     return DatasetResult(
         name=name,
         clean=clean,
         rejected=rejected,
-        stats={"rejected_rows": obs.get["rejected_rows"]},
+        stats=stats,
+        partitions=stats.pop("partitions", None),
     )
 
 
@@ -151,7 +213,7 @@ def run_pipeline(
     with post-write LIMIT-5 probes (the Athena validation step,
     stepfunctions/delta-lake.json:147-215).
 
-    Each table's checkpoints are freed once the table is written, so the
+    Each table's checkpoint is freed once the table is written, so the
     results carry its stats but their ``clean`` and ``rejected`` frames
     can no longer be acted on: read the zones for the rows.
     """
@@ -172,8 +234,9 @@ def run_pipeline(
 
     def run_table(name: str) -> DatasetResult:
         schema = SCHEMAS[name]
+        # process_dataset counts and drops the CSV's corrupt rows in its
+        # one action: no split_corrupt checkpoint of a side nothing reads
         raw = read_csv_typed(spark, raw_paths[name], schema)
-        raw, _corrupt = split_corrupt(raw)
 
         fk_rules = [
             ForeignKeyRule(col, reference[ref], col)
@@ -189,12 +252,14 @@ def run_pipeline(
             rules=domain_rules.get(name),
             fk_rules=fk_rules,
             job_name=job_name,
+            partition_by=PARTITION_COLUMNS[name],
         )
 
         path = os.path.join(curated_base, name)
         merge_upsert(
             spark, res.clean, path, [PRIMARY_KEYS[name]],
             partition_by=PARTITION_COLUMNS[name],
+            partitions=res.partitions,
         )
         if res.stats["rejected_rows"]:
             append_rejected(res.rejected, rejected_base, name)
@@ -218,9 +283,8 @@ def run_pipeline(
             reference[name] = one_slot_persist(
                 curated, slot=f"pipeline-ref-{name}"
             )
-        # the table is written: free its raw and batch checkpoints now,
-        # not when the JVM's GC collects them, which can be many runs later
-        _free_local_checkpoint(raw)
+        # the table is written: free its batch checkpoint now, not when
+        # the JVM's GC collects it, which can be many runs later
         _free_local_checkpoint(res.clean)
         return res
 

@@ -228,6 +228,7 @@ def merge_upsert(
     keys: list[str],
     partition_by: str | None = None,
     evolve_schema: bool = False,
+    partitions: list[tuple] | None = None,
 ) -> None:
     """Idempotent MERGE: rows matching on ``keys`` are replaced by the
     update row; new keys are inserted. Re-running the same updates is a
@@ -253,6 +254,12 @@ def merge_upsert(
     the same option (``spark.read.option("mergeSchema", "true")``)
     until a full-rewrite compaction (:func:`compact_table`) homogenizes
     the footers; Delta tables carry the schema in the log and do not.
+
+    ``partitions``, with ``partition_by``, are the distinct
+    ``(value, value cast to string)`` pairs of the updates' partition
+    column, when the caller already holds them (``plans.pipeline``
+    observes them on the batch's own action); the rewrite then prunes
+    by them instead of collecting them with a Spark job of its own.
     """
     if not _has_data(path):
         write_partitioned(updates, path, partition_by)
@@ -262,15 +269,18 @@ def merge_upsert(
         _delta_merge(spark, updates, path, keys)
         return
 
+    # no distinct(): a left-anti join ignores duplicate keys, and over a
+    # checkpointed batch the distinct is a shuffle stage of its own
     _parquet_rewrite_core(
         spark,
         path,
-        remove_keys=updates.select(*keys).distinct(),
+        remove_keys=updates.select(*keys),
         inserts=updates,
         keys=keys,
         prune_source=updates,
         partition_by=partition_by,
         evolve_schema=evolve_schema,
+        partitions=partitions,
     )
 
 
@@ -283,15 +293,17 @@ def _parquet_rewrite_core(
     prune_source: DataFrame,
     partition_by: str | None,
     evolve_schema: bool,
+    partitions: list[tuple] | None = None,
 ) -> None:
     """Shared rewrite engine under MERGE and CDC apply: drop
     ``remove_keys`` from the target, add ``inserts``, rewriting only
-    the partitions ``prune_source`` touches, then staging-swap."""
+    the partitions ``prune_source`` touches (or ``partitions`` names,
+    see :func:`_prune`), then staging-swap."""
     # mergeSchema: the table may hold mixed footers after a pruned
     # evolve-merge (see merge_upsert docstring) — a plain read could
     # sample an old footer and silently drop the evolved column.
     target = spark.read.option("mergeSchema", "true").parquet(path)
-    affected, entries = _prune(target, prune_source, partition_by)
+    affected, entries = _prune(target, prune_source, partition_by, partitions)
     survivors = affected.join(remove_keys, on=keys, how="left_anti")
     extra = [c for c in inserts.columns if c not in affected.columns]
     if extra and not evolve_schema:
@@ -321,13 +333,18 @@ def _parquet_rewrite_core(
 
 
 def _prune(
-    target: DataFrame, prune_source: DataFrame, partition_by: str | None
+    target: DataFrame,
+    prune_source: DataFrame,
+    partition_by: str | None,
+    pairs: list[tuple] | None = None,
 ) -> tuple[DataFrame, list[str] | None]:
     """``(affected, entries)``: the rows of ``target`` in the partitions
     ``prune_source`` touches, and those partitions' directory names.
     Unpartitioned, every row is affected and ``entries`` is None (a
     whole-table rewrite).
 
+    ``pairs`` are the touched partitions' distinct ``(value, string)``
+    pairs; when None they are collected from ``prune_source``.
     Collecting DISTINCT partition VALUES is a driver-side list of
     partitions (dates), not keys — bounded and cheap at any scale. The
     STRING form is collected alongside via Spark's own cast so the swap
@@ -335,21 +352,21 @@ def _prune(
     timestamps, booleans), not Python's str()."""
     if not partition_by:
         return target, None
-    pairs = (
-        prune_source.select(
-            F.col(partition_by).alias("__v"),
-            F.col(partition_by).cast("string").alias("__s"),
+    if pairs is None:
+        pairs = (
+            prune_source.select(
+                F.col(partition_by), F.col(partition_by).cast("string")
+            )
+            .distinct()
+            .collect()
         )
-        .distinct()
-        .collect()
-    )
-    parts = [r["__v"] for r in pairs]
+    parts = [v for v, _ in pairs]
     # dict.fromkeys: "" and null both map to __HIVE_DEFAULT_PARTITION__;
     # a change set containing both must not list the entry twice or
     # the swap loop would re-process (and destroy) the moved directory.
     entries = list(
         dict.fromkeys(
-            f"{partition_by}={_escape_partition_value(r['__s'])}" for r in pairs
+            f"{partition_by}={_escape_partition_value(s)}" for _, s in pairs
         )
     )
     # "" is stored as __HIVE_DEFAULT_PARTITION__ and READ BACK AS
@@ -498,7 +515,7 @@ def apply_changes(
     _parquet_rewrite_core(
         spark,
         path,
-        remove_keys=changes.select(*keys).distinct(),
+        remove_keys=changes.select(*keys),
         inserts=upserts,
         keys=keys,
         prune_source=changes,

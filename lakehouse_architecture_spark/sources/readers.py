@@ -10,6 +10,7 @@ instead of silently nulling them.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +33,13 @@ def read_csv_typed(
     ``path`` may be a glob (``dir/*.csv``) — Spark's multi-file scan is the
     UNION ALL of the daily files the reference relies on
     (/root/reference/src/glue_etl.py:474-475).
+
+    A local glob is expanded here, sorted as Spark's own globbing sorts
+    it: handed the literal glob, Spark stats it as a possible
+    streaming-sink metadata directory and logs a
+    ``FileNotFoundException`` WARN on every read. URIs and a glob that
+    matches nothing go to Spark as given (the latter fails there with
+    PATH_NOT_FOUND).
     """
     read_schema = StructType(
         list(schema.fields) + [StructField(CORRUPT_COL, StringType(), True)]
@@ -45,7 +53,15 @@ def read_csv_typed(
     )
     if timestamp_format:
         reader = reader.option("timestampFormat", timestamp_format)
-    return reader.load(path)
+    return reader.load(_expand_local_glob(path))
+
+
+def _expand_local_glob(path: str) -> str | list[str]:
+    """The sorted files a local glob matches; any other path, and a glob
+    matching nothing, unchanged."""
+    if "://" in path or not glob.has_magic(path):
+        return path
+    return sorted(glob.glob(path)) or path
 
 
 def read_csv_inferred(

@@ -78,8 +78,14 @@ def stream_csv_ingest_merge(
     table = os.path.basename(os.path.normpath(target_path))
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        res = process_dataset(batch_df, schema, table, keys, rules, fk_rules)
-        merge_upsert(spark, res.clean, target_path, keys, partition_by)
+        res = process_dataset(
+            batch_df, schema, table, keys, rules, fk_rules,
+            partition_by=partition_by,
+        )
+        merge_upsert(
+            spark, res.clean, target_path, keys, partition_by,
+            partitions=res.partitions,
+        )
         if rejected_path is not None and res.stats["rejected_rows"]:
             append_rejected(res.rejected, rejected_path, "stream_rejected")
         _free_local_checkpoint(res.clean)  # the micro-batch is written

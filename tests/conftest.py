@@ -38,15 +38,17 @@ def sf_dir():
 @pytest.fixture
 def jobs_launched(spark):
     """``jobs_launched(fn)``: the description of every Spark job ``fn``
-    launches, counted under a job group of its own (jobs Spark describes
-    itself, such as "Listing leaf files ...", keep their own text)."""
+    launches, counted under a job group of its own. A job Spark gives no
+    description is named by its call site (``collect at file.py:line``,
+    ``localCheckpoint at ...``); jobs Spark describes itself, such as
+    "Listing leaf files ...", keep their own text."""
     sc = spark.sparkContext
 
     def run(fn) -> list[str]:
         props = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
         saved = {k: sc.getLocalProperty(k) for k in props}
         group = f"jobs-launched-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
+        sc.setJobGroup(group, None)
         try:
             fn()
         finally:
@@ -56,8 +58,9 @@ def jobs_launched(spark):
         store = sc._jsc.sc().statusStore()
         out = []
         for jid in sc.statusTracker().getJobIdsForGroup(group):
-            desc = store.job(jid).description()
-            out.append(desc.get() if desc.isDefined() else "")
+            job = store.job(jid)
+            desc = job.description()
+            out.append(desc.get() if desc.isDefined() else job.name())
         return out
 
     return run

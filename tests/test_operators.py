@@ -79,6 +79,35 @@ def test_read_csv_typed_corrupt_capture(spark, tmp_path):
     assert corrupt.collect()[0]._corrupt_record.startswith("not,an,int")
 
 
+def test_read_csv_typed_glob_equals_the_file_list(spark, tmp_path):
+    """A local glob is expanded to its sorted files before Spark sees
+    it (handed the literal glob, Spark stats it as a streaming-sink
+    metadata directory and logs a FileNotFoundException): the glob read
+    reads exactly the matched files, row for row, and a glob matching
+    nothing still fails in Spark."""
+    from pyspark.errors import AnalysisException
+
+    header = "order_num,order_id,user_id,order_timestamp,total_amount,date\n"
+    for i, day in enumerate(["2025-04-02", "2025-04-01"]):
+        (tmp_path / f"day{i}.csv").write_text(
+            header + f"{90 + i},{501 + i},1990,{day}T11:27:00,1.5,{day}\n"
+        )
+    (tmp_path / "notes.txt").write_text("not a csv\n")
+    files = sorted(str(p) for p in tmp_path.glob("*.csv"))
+
+    by_glob = read_csv_typed(spark, str(tmp_path / "*.csv"), ORDERS_SCHEMA)
+    by_list = read_csv_typed(spark, files[0], ORDERS_SCHEMA).unionByName(
+        read_csv_typed(spark, files[1], ORDERS_SCHEMA)
+    )
+    assert sorted(by_glob.collect()) == sorted(by_list.collect())
+    assert sorted(
+        f.rsplit("/", 1)[1] for f in by_glob.inputFiles()
+    ) == ["day0.csv", "day1.csv"]
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        read_csv_typed(spark, str(tmp_path / "*.json"), ORDERS_SCHEMA)
+
+
 def test_read_csv_inferred_freeze_roundtrip(spark, tmp_path):
     """The opt-in inference escape hatch must type columns sensibly and
     its inferred schema must be freezable into the typed reader (the

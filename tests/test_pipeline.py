@@ -8,10 +8,17 @@ from __future__ import annotations
 import datetime as dt
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.operators import caching
-from lakehouse_architecture_spark.operators.validation import ForeignKeyRule
+from lakehouse_architecture_spark.operators.dedup import dedupe_by_key
+from lakehouse_architecture_spark.operators.validation import (
+    ForeignKeyRule,
+    PositiveRule,
+    rules_from_schema,
+    validate,
+)
 from lakehouse_architecture_spark.plans.pipeline import (
     cast_to_schema,
     process_dataset,
@@ -138,10 +145,10 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert results2["order_items"].stats["clean_rows"] == 2
 
 
-def test_process_dataset_evaluates_the_batch_once(spark, tmp_path):
-    """The cast, the rules and the FK joins run in one action: the
-    clean and rejected frames read its materialised rows, and the
-    rejected count is observed on it."""
+def test_process_dataset_evaluates_the_batch_once(spark, tmp_path, jobs_launched):
+    """The corrupt filter, the cast, the rules, the FK joins and the PK
+    dedup run in one action: the clean and rejected frames read its
+    materialised rows, and the row accounting is observed on it."""
     path = _write(
         tmp_path, "order_items", ITEMS_CSV,
         [
@@ -151,11 +158,13 @@ def test_process_dataset_evaluates_the_batch_once(spark, tmp_path):
             "3,999,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01",  # bad FK order
             "4,502,1991,,999,1,0,2025-04-01T12:00:00,2025-04-01",  # bad FK product
             ",501,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01",  # null PK
+            "5,501,1990,ten,1,1,0,2025-04-01T11:27:00,2025-04-01",  # malformed
         ],
     )
     orders = spark.createDataFrame([(501,), (502,)], "order_id int")
     products = spark.createDataFrame([(1,), (2,)], "product_id int")
-    res = process_dataset(
+    out = []
+    jobs = jobs_launched(lambda: out.append(process_dataset(
         read_csv_typed(spark, path, ORDER_ITEMS_SCHEMA),
         ORDER_ITEMS_SCHEMA,
         "order_items",
@@ -164,14 +173,107 @@ def test_process_dataset_evaluates_the_batch_once(spark, tmp_path):
             ForeignKeyRule("order_id", orders, "order_id"),
             ForeignKeyRule("product_id", products, "product_id"),
         ],
-    )
+        partition_by="date",
+    )))
+    res = out[0]
+    # one action: the checkpoint's job and the query-stage jobs adaptive
+    # execution submits under it; no count or collect of its own
+    assert sum(j.startswith("localCheckpoint at") for j in jobs) == 1, jobs
+    assert all(
+        j.startswith(("localCheckpoint at", "$anonfun$withThreadLocalCaptured"))
+        for j in jobs
+    ), jobs
     for df in (res.clean, res.rejected):
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "csv" not in plan.lower() and "Join" not in plan, plan
+    plan = res.clean._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan, plan
 
-    assert res.stats["rejected_rows"] == res.rejected.count() == 3
-    assert sorted(r.id for r in res.clean.collect()) == [1, 2]
+    clean = sorted(r.id for r in res.clean.collect())
+    assert clean == [1, 2]
+    assert res.rejected.count() == 3
+    assert res.stats == {
+        "raw_rows": 7,
+        "corrupt_rows": 1,
+        "rejected_rows": 3,
+        "dedup_dropped_rows": 1,
+    }
+    s = res.stats
+    assert s["raw_rows"] == (
+        s["corrupt_rows"] + s["rejected_rows"] + len(clean) + s["dedup_dropped_rows"]
+    )
+    assert res.partitions == [(dt.date(2025, 4, 1), "2025-04-01")]
+
+
+@pytest.mark.parametrize(
+    "rows", [[], ["x,y,z", "not,an,int,row,xx,yy"]], ids=["empty", "all_corrupt"]
+)
+def test_process_dataset_counts_a_batch_with_no_parsed_row(spark, tmp_path, rows):
+    """Adaptive execution replaces an empty shuffle stage by an empty
+    relation, and an observe() below it is lost with it: the counts
+    must still come back when no row survives the corrupt filter."""
+    path = _write(tmp_path, "orders", ORDERS_CSV, rows)
+    res = process_dataset(
+        read_csv_typed(spark, path, ORDERS_SCHEMA),
+        ORDERS_SCHEMA,
+        "orders",
+        ["order_id"],
+        partition_by="date",
+    )
+    assert res.stats == {
+        "raw_rows": len(rows),
+        "corrupt_rows": len(rows),
+        "rejected_rows": 0,
+        "dedup_dropped_rows": 0,
+    }
+    assert res.partitions == [] and res.clean.count() == 0
+
+
+# orders rows (order_num, order_id, user_id, order_timestamp,
+# total_amount, date); total_amount <= 0 is invalid
+_INVALID_FIRST = [
+    # order 501's first row by the default order is invalid, a later valid
+    ("1", "501", "7", "2025-04-01T10:00:00", "-5.00", "2025-04-01"),
+    ("2", "501", "7", "2025-04-01T10:00:00", "10.00", "2025-04-01"),
+    ("3", "501", "7", "2025-04-01T10:00:00", "20.00", "2025-04-01"),
+    ("4", "502", "8", "2025-04-01T10:00:00", "-1.00", "2025-04-01"),
+]
+_SPLIT_PARTITIONS = [
+    # order 601's duplicates sit in three date partitions
+    ("5", "601", "7", "2025-04-03T10:00:00", "10.00", "2025-04-03"),
+    ("6", "601", "7", "2025-04-01T10:00:00", "10.00", "2025-04-01"),
+    ("7", "601", "7", "2025-04-02T10:00:00", "10.00", None),
+    ("8", "602", "8", "2025-04-02T10:00:00", "10.00", "2025-04-02"),
+]
+
+
+@pytest.mark.parametrize(
+    "rows", [_INVALID_FIRST, _SPLIT_PARTITIONS], ids=["invalid_first", "split_partitions"]
+)
+def test_process_dataset_clean_equals_dedupe_by_key(spark, rows):
+    """The batch's rank keeps exactly the row ``dedupe_by_key`` keeps
+    of the valid rows, and its observed partitions are the kept rows'."""
+    raw = spark.createDataFrame(
+        rows,
+        "order_num string, order_id string, user_id string,"
+        " order_timestamp string, total_amount string, date string",
+    )
+    rules = [PositiveRule("total_amount")]
+    res = process_dataset(
+        raw, ORDERS_SCHEMA, "orders", ["order_id"], rules=rules,
+        partition_by="date",
+    )
+    valid, _ = validate(
+        cast_to_schema(raw, ORDERS_SCHEMA),
+        rules_from_schema(ORDERS_SCHEMA) + rules,
+    )
+    want = dedupe_by_key(valid, ["order_id"])
+    assert sorted(res.clean.collect()) == sorted(want.collect())
+    assert sorted(res.partitions) == sorted(
+        (r.date, str(r.date)) for r in want.select("date").distinct().collect()
+    )
+    assert res.stats["dedup_dropped_rows"] == valid.count() - want.count()
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):
@@ -252,6 +354,14 @@ def test_pipeline_over_many_date_partitions_launches_no_listing_job(
     jobs = jobs_launched(lambda: out.append(run_pipeline(spark, raw, curated, rejected)))
     assert jobs, "the cycle launched no job at all: nothing was counted"
     assert [j for j in jobs if j.startswith("Listing leaf files")] == []
+    # the MERGE prunes by the partitions the batch's action observed; it
+    # collects none of its own (jobs of the products and orders threads
+    # are named by the thread's call site, order_items' by their own)
+    assert [
+        j for j in jobs
+        if j.startswith("collect at") and j.split(":")[0].endswith("sinks/writers.py")
+    ] == []
+    assert any(j.startswith("collect at") for j in jobs), jobs
 
     # clean_rows is read from the footers of the zone the MERGE rewrote
     for name, res in out[0].items():

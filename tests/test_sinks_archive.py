@@ -558,7 +558,9 @@ def test_merge_rewrite_underscore_partition_column(spark, tmp_path, entry):
     assert got == want
 
 
-@pytest.mark.parametrize("entry", ["merge_upsert", "delete_where"])
+@pytest.mark.parametrize(
+    "entry", ["merge_upsert", "merge_upsert_partitions", "delete_where"]
+)
 def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
     """The r9 ADVICE finding: Spark STORES an empty-string partition
     value as __HIVE_DEFAULT_PARTITION__ and READS IT BACK AS NULL, so
@@ -569,18 +571,22 @@ def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
     (one directory, previously listed twice — the second pass
     destroyed the freshly-moved partition). DELETE pruned with a bare
     isin over the matching partition values, which never matches
-    null: it deleted nothing and reported 0."""
+    null: it deleted nothing and reported 0. ``merge_upsert_partitions``
+    hands the MERGE the (value, string) partition pairs a caller
+    observed instead of letting it collect them: the rewrite must be the
+    same, the Hive-escaped ``h:m`` directory included."""
     from pyspark.sql import functions as F
 
     from lakehouse_architecture_spark.sinks import writers
 
     path = str(tmp_path / "nullpart")
     base = spark.createDataFrame(
-        [(1, "keepme", None), (2, "b", "p1"), (3, "c", "")],
+        [(1, "keepme", None), (2, "b", "p1"), (3, "c", ""), (4, "d", "h:m")],
         "k long, v string, p string",
     )
     writers.write_partitioned(base, path, "p")
     assert "p=__HIVE_DEFAULT_PARTITION__" in os.listdir(path)
+    assert "p=h%3Am" in os.listdir(path)
 
     def rows():
         return {(r.k, r.v, r.p) for r in spark.read.parquet(path).collect()}
@@ -588,19 +594,26 @@ def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
     if entry == "delete_where":
         n = writers.delete_where(spark, path, F.col("k") == 3, partition_by="p")
         assert n == 1
-        assert rows() == {(1, "keepme", None), (2, "b", "p1")}
+        assert rows() == {(1, "keepme", None), (2, "b", "p1"), (4, "d", "h:m")}
         return
+
+    def merge(upd, pairs):
+        writers.merge_upsert(
+            spark, upd, path, ["k"], partition_by="p",
+            partitions=pairs if entry == "merge_upsert_partitions" else None,
+        )
 
     # change set uses "" — same directory as the existing null rows
     upd = spark.createDataFrame(
-        [(10, "x", "")], "k long, v string, p string"
+        [(10, "x", ""), (4, "D", "h:m")], "k long, v string, p string"
     )
-    writers.merge_upsert(spark, upd, path, ["k"], partition_by="p")
+    merge(upd, [("", ""), ("h:m", "h:m")])
     # the pre-existing null-partition rows SURVIVE ("" reads back null)
     assert rows() == {
         (1, "keepme", None),
         (2, "b", "p1"),
         (3, "c", None),
+        (4, "D", "h:m"),
         (10, "x", None),
     }
 
@@ -610,11 +623,12 @@ def test_merge_rewrite_empty_string_partition_is_null(spark, tmp_path, entry):
         [(1, "updated", None), (11, "y", "")],
         "k long, v string, p string",
     )
-    writers.merge_upsert(spark, upd2, path, ["k"], partition_by="p")
+    merge(upd2, [(None, None), ("", "")])
     assert rows() == {
         (1, "updated", None),
         (2, "b", "p1"),
         (3, "c", None),
+        (4, "D", "h:m"),
         (10, "x", None),
         (11, "y", None),
     }
