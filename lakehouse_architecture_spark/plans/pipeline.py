@@ -300,13 +300,21 @@ def run_pipeline(
     if len(dims) > 1:
         from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+        # Spark's local properties (job group, description) are per JVM
+        # thread: each thread starts from a copy of the caller's, as
+        # pyspark's inheritable_thread_target gives it. Not that
+        # wrapper itself: Spark names a job after the caller of the
+        # first pyspark frame on the stack, which would be the wrapper,
+        # so every job of the thread read "wrapped at .../thread.py".
+        jsc = spark.sparkContext._jsc.sc()
+        caller_props = jsc.getLocalProperties().clone()
+
+        def run_dim(name: str) -> DatasetResult:
+            jsc.setLocalProperties(caller_props.clone())
+            return run_table(name)
 
         with ThreadPoolExecutor(max_workers=len(dims)) as pool:
-            futures = {
-                n: pool.submit(inheritable_thread_target(spark)(run_table), n)
-                for n in dims
-            }
+            futures = {n: pool.submit(run_dim, n) for n in dims}
             for n in dims:
                 results[n] = futures[n].result()
     else:

@@ -111,7 +111,7 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     # slot's held corrupt frame recomputed from the raw scan and threw
     # at action time); (b) the checkpoint blocks are released when the
     # DataFrame is garbage-collected, so repeated splits self-bound
-    # without a slot. lazy=first-action; the pipeline acts per table.
+    # without a slot. Lazy: the first action over either side fills it.
     # At 100 TB the split runs per ingest batch (a day's files), never
     # corpus-wide — the materialization is batch-sized by construction.
     # DURABILITY CAVEAT (cluster deployments): localCheckpoint blocks

@@ -11,10 +11,17 @@ Everything reuses the batch engine (the CSV ingest runs each micro-batch
 through the batch pipeline's ``process_dataset`` and ``merge_upsert``),
 so batch and streaming cannot drift apart — one code path, two entry
 points.
+
+``foreachBatch`` is at-least-once: a crash after a batch's writes and
+before Spark's offset commit replays the batch under the same id. Every
+sink here that is not idempotent by itself (appends, read-modify-write
+folds) therefore goes through one stage-seal-publish-commit protocol,
+:func:`_exactly_once`, and every job requires a checkpoint.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 from typing import Callable
@@ -33,8 +40,92 @@ from pyspark.sql.types import (
 from lakehouse_architecture_spark.sinks.writers import (
     _has_data,
     _refresh_swapped_path,
-    _swap_staged,
 )
+
+
+def _foreach_batch(stream: DataFrame, handle_batch: Callable, checkpoint_dir: str):
+    """The writer every job here returns: ``handle_batch(batch_df,
+    batch_id)`` per micro-batch, offsets checkpointed in
+    ``checkpoint_dir``, triggered ``availableNow`` (catch-up batch
+    semantics; switch the trigger for continuous tailing)."""
+    return (
+        stream.writeStream.foreachBatch(handle_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+    )
+
+
+def _publish_staged(staged_sub: str, dest_dir: str, batch_id: int) -> None:
+    """Move each staged data file into ``dest_dir`` under a
+    deterministic ``batch{id}-`` name. Replaying a half-published batch
+    re-moves only the files still in staging; already-moved files are
+    gone from staging, so nothing double-publishes."""
+    if not os.path.isdir(staged_sub):
+        return
+    os.makedirs(dest_dir, exist_ok=True)
+    for fname in sorted(os.listdir(staged_sub)):
+        if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
+            continue
+        src = os.path.join(staged_sub, fname)
+        os.replace(src, os.path.join(dest_dir, f"batch{batch_id}-{fname}"))
+
+
+def _exactly_once(
+    batch_df: DataFrame,
+    batch_id: int,
+    checkpoint_dir: str,
+    ns: str,
+    stage: Callable[[str], None],
+    publish: dict[str, str] | Callable[[str], None],
+) -> None:
+    """Apply one micro-batch's outputs EXACTLY-ONCE under replay, by
+    stage-seal-publish-commit: without it, a crash between two appends
+    of one batch replays the batch with half its outputs already
+    visible. Per batch:
+
+    - a batch whose ``{ns}_commits/batch-{id}`` marker exists is already
+      published; its replay only sweeps the staging that a crash
+      between the marker and the cleanup can leave behind;
+    - otherwise the batch-keyed ``{ns}_staging/{id}`` directory is
+      swept, ``stage(staging)`` writes every output under it, and a
+      ``_STAGED`` seal marks it complete. Nothing of the batch is
+      visible before the seal, so a crash mid-stage replays into a
+      clean recompute against untouched destinations. An empty batch
+      stages nothing and commits at once;
+    - ``publish`` moves the staged outputs into place: a ``{staging
+      sub: destination}`` map moves each sub-directory's files with
+      :func:`_publish_staged`; a callable gets the staging directory
+      and must resume after a crash part-way. A sealed batch is never
+      re-staged: recomputing against half-published destinations would
+      see the batch's own outputs (the near-dup index would drop every
+      survivor as its own duplicate);
+    - the commit marker lands last, then staging is removed.
+
+    Moves are same-filesystem renames (checkpoint and sinks must share
+    a filesystem, the usual arrangement); on object stores, swap the
+    move for a copy+delete or a manifest commit. ``ns`` namespaces the
+    markers and staging so several jobs can share one checkpoint."""
+    commit_dir = os.path.join(checkpoint_dir, f"{ns}_commits")
+    committed = os.path.join(commit_dir, f"batch-{batch_id}")
+    staging = os.path.join(checkpoint_dir, f"{ns}_staging", str(batch_id))
+    sealed = os.path.join(staging, "_STAGED")
+    if os.path.exists(committed):
+        shutil.rmtree(staging, ignore_errors=True)
+        return
+    if not os.path.exists(sealed) and not batch_df.isEmpty():
+        shutil.rmtree(staging, ignore_errors=True)
+        os.makedirs(staging)
+        stage(staging)
+        open(sealed, "w").close()
+    if os.path.exists(sealed):
+        if callable(publish):
+            publish(staging)
+        else:
+            for sub, dest in publish.items():
+                _publish_staged(os.path.join(staging, sub), dest, batch_id)
+    os.makedirs(commit_dir, exist_ok=True)
+    open(committed, "w").close()
+    shutil.rmtree(staging, ignore_errors=True)
 
 
 def stream_csv_ingest_merge(
@@ -55,17 +146,15 @@ def stream_csv_ingest_merge(
     pipeline would land it.
 
     Late/duplicate data handling is the reference's: upsert on PK makes
-    reprocessing idempotent. Run with ``trigger(availableNow=True)`` for
-    catch-up batch semantics or default trigger for continuous tailing.
+    reprocessing idempotent. The rejected rows are an append, which is
+    not, so they publish through :func:`_exactly_once` (namespace
+    ``rejected``): a replayed batch lands its rejections once.
     """
     from lakehouse_architecture_spark.operators.iterative import (
         _free_local_checkpoint,
     )
     from lakehouse_architecture_spark.plans.pipeline import process_dataset
-    from lakehouse_architecture_spark.sinks.writers import (
-        append_rejected,
-        merge_upsert,
-    )
+    from lakehouse_architecture_spark.sinks.writers import merge_upsert
 
     stream = (
         spark.readStream.format("csv")
@@ -87,14 +176,18 @@ def stream_csv_ingest_merge(
             partitions=res.partitions,
         )
         if rejected_path is not None and res.stats["rejected_rows"]:
-            append_rejected(res.rejected, rejected_path, "stream_rejected")
+            _exactly_once(
+                res.rejected, batch_id, checkpoint_dir, "rejected",
+                stage=lambda staging: res.rejected.write.parquet(
+                    os.path.join(staging, "rejected")
+                ),
+                publish={
+                    "rejected": os.path.join(rejected_path, "stream_rejected")
+                },
+            )
         _free_local_checkpoint(res.clean)  # the micro-batch is written
 
-    return (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def stream_near_dup_ingest(
@@ -128,69 +221,24 @@ def stream_near_dup_ingest(
        groupBy-sum it), so appending partial counts is correct and the
        index stays current without rewriting corpus-scale files.
 
-    Steps 4-5 are EXACTLY-ONCE via stage-then-publish (the r5 ADVICE
-    failure window: a crash between the survivor append and the index
-    append used to replay the batch with its survivors absent from the
-    index, duplicating them in the curated zone). Per batch:
-
-    - already-committed batch ids (marker under the checkpoint) are
-      skipped outright;
-    - all four outputs are first written to a batch-keyed STAGING
-      directory under the checkpoint and sealed with a ``_STAGED``
-      marker — nothing is visible to the index or the curated zone
-      until staging completes, so a crash mid-stage replays into a
-      clean overwrite;
-    - publish then MOVES each staged data file into its destination
-      under a ``batch{id}-`` deterministic name; a crash mid-publish
-      resumes (sealed staging is never recomputed — recomputing against
-      a half-published index would see the batch's own bands and drop
-      every survivor as its own duplicate) and moves only the files
-      still in staging;
-    - the commit marker lands last, then staging is removed.
-
-    Moves are same-filesystem renames (checkpoint and sinks must share
-    a filesystem — the usual arrangement); on object stores, swap the
-    move for a copy+delete or a manifest commit.
+    Steps 4-5 are EXACTLY-ONCE via :func:`_exactly_once` (namespace
+    ``near_dup``): a crash between the survivor append and the index
+    append would otherwise replay the batch with its survivors absent
+    from the index, duplicating them in the curated zone.
     """
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        near_dup_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            index_path=index_path,
-            target_path=target_path,
-            checkpoint_dir=checkpoint_dir,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            max_doc_freq=max_doc_freq,
-        )
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(schema)
-        .load(source_dir)
+    handle_batch = functools.partial(
+        near_dup_handle_batch,
+        spark,
+        index_path=index_path,
+        target_path=target_path,
+        checkpoint_dir=checkpoint_dir,
+        text_col=text_col,
+        id_col=id_col,
+        threshold=threshold,
+        max_doc_freq=max_doc_freq,
     )
-    return (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
-
-
-def _publish_staged(staged_sub: str, dest_dir: str, batch_id: int) -> None:
-    """Move each staged data file into ``dest_dir`` under a
-    deterministic ``batch{id}-`` name. Replaying a half-published batch
-    re-moves only the files still in staging; already-moved files are
-    gone from staging, so nothing double-publishes."""
-    if not os.path.isdir(staged_sub):
-        return
-    os.makedirs(dest_dir, exist_ok=True)
-    for fname in sorted(os.listdir(staged_sub)):
-        if not fname.endswith(".parquet") or fname.startswith(("_", ".")):
-            continue
-        src = os.path.join(staged_sub, fname)
-        os.replace(src, os.path.join(dest_dir, f"batch{batch_id}-{fname}"))
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def near_dup_handle_batch(
@@ -207,8 +255,7 @@ def near_dup_handle_batch(
     max_doc_freq: int | None = None,
 ) -> None:
     """One exactly-once micro-batch of :func:`stream_near_dup_ingest`
-    (module-level so replay/crash scenarios are directly testable).
-    See that docstring for the stage-seal-publish-commit protocol."""
+    (module-level so replay/crash scenarios are directly testable)."""
     from lakehouse_architecture_spark.operators.minhash import (
         MinHashCorpusIndex,
         build_minhash_corpus_index,
@@ -216,25 +263,7 @@ def near_dup_handle_batch(
         minhash_lsh_incremental_indexed,
     )
 
-    commit_dir = os.path.join(checkpoint_dir, "near_dup_commits")
-    committed = os.path.join(commit_dir, f"batch-{batch_id}")
-    staging = os.path.join(checkpoint_dir, "near_dup_staging", str(batch_id))
-    if os.path.exists(committed):
-        # exactly-once: already fully published. A crash between the
-        # marker write and the cleanup below can leave the (fully
-        # drained) staging directory behind — sweep it here so crashes
-        # never accumulate disk across the stream's lifetime.
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    sealed = os.path.join(staging, "_STAGED")
-
-    if not os.path.exists(sealed):
-        # Nothing of this batch is visible yet (publish starts only
-        # after the seal), so recomputing against the index is safe.
-        if batch_df.isEmpty():
-            os.makedirs(commit_dir, exist_ok=True)
-            open(committed, "w").close()
-            return
+    def stage(staging: str) -> None:
         idx = MinHashCorpusIndex.load(spark, index_path)
         corpus_dups = minhash_lsh_incremental_indexed(
             batch_df, idx, text_col, id_col,
@@ -259,9 +288,7 @@ def near_dup_handle_batch(
         # four staged writes below.
         survivors = s1.join(self_dups, id_col, "left_anti").persist()
         try:
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(staging, "target")
-            )
+            survivors.write.parquet(os.path.join(staging, "target"))
             add = build_minhash_corpus_index(
                 survivors,
                 text_col, id_col,
@@ -269,30 +296,21 @@ def near_dup_handle_batch(
                 band_size=idx.band_size,
                 shingle_n=idx.shingle_n,
             )
-            add.bands.write.mode("overwrite").parquet(
-                os.path.join(staging, "bands")
-            )
-            add.grams.write.mode("overwrite").parquet(
-                os.path.join(staging, "grams")
-            )
-            add.shingle_dfs.write.mode("overwrite").parquet(
-                os.path.join(staging, "shingle_dfs")
-            )
+            add.bands.write.parquet(os.path.join(staging, "bands"))
+            add.grams.write.parquet(os.path.join(staging, "grams"))
+            add.shingle_dfs.write.parquet(os.path.join(staging, "shingle_dfs"))
         finally:
             survivors.unpersist()
-        open(sealed, "w").close()
 
-    _publish_staged(os.path.join(staging, "target"), target_path, batch_id)
-    _publish_staged(os.path.join(staging, "bands"), f"{index_path}/bands", batch_id)
-    _publish_staged(os.path.join(staging, "grams"), f"{index_path}/grams", batch_id)
-    _publish_staged(
-        os.path.join(staging, "shingle_dfs"),
-        f"{index_path}/shingle_dfs",
-        batch_id,
+    _exactly_once(
+        batch_df, batch_id, checkpoint_dir, "near_dup", stage,
+        {
+            "target": target_path,
+            "bands": f"{index_path}/bands",
+            "grams": f"{index_path}/grams",
+            "shingle_dfs": f"{index_path}/shingle_dfs",
+        },
     )
-    os.makedirs(commit_dir, exist_ok=True)
-    open(committed, "w").close()
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 def stream_dedup(
@@ -479,29 +497,16 @@ def media_dhash_handle_batch(
     max_hamming: int = 4,
 ) -> None:
     """One exactly-once micro-batch of :func:`stream_image_dhash_ingest`
-    — the text pipeline's stage-seal-publish-commit protocol verbatim,
-    with a one-relation index (media_id, dhash parquet): no mergeable
-    partial aggregates needed, appending survivor hashes IS the index
-    update."""
+    (namespace ``media_dhash``), with a one-relation index (media_id,
+    dhash parquet): no mergeable partial aggregates needed, appending
+    survivor hashes IS the index update."""
     from lakehouse_architecture_spark.operators.multimodal import (
         extract_image_dhash,
         image_near_dup_against,
         image_near_dup_pairs,
     )
 
-    commit_dir = os.path.join(checkpoint_dir, "media_dhash_commits")
-    committed = os.path.join(commit_dir, f"batch-{batch_id}")
-    staging = os.path.join(checkpoint_dir, "media_dhash_staging", str(batch_id))
-    if os.path.exists(committed):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    sealed = os.path.join(staging, "_STAGED")
-
-    if not os.path.exists(sealed):
-        if batch_df.isEmpty():
-            os.makedirs(commit_dir, exist_ok=True)
-            open(committed, "w").close()
-            return
+    def stage(staging: str) -> None:
         hashes = extract_image_dhash(batch_df).persist()
         try:
             if _has_data(index_path):
@@ -523,23 +528,19 @@ def media_dhash_handle_batch(
             survivors = batch_df.join(
                 surv_ids.select("media_id"), "media_id", "left_semi"
             )
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(staging, "target")
-            )
+            survivors.write.parquet(os.path.join(staging, "target"))
             # undecodable images (null dhash) are curated but NOT
             # indexed — a null can never match, indexing it is noise
-            surv_ids.filter(F.col("dhash").isNotNull()).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(staging, "hashes"))
+            surv_ids.filter(F.col("dhash").isNotNull()).write.parquet(
+                os.path.join(staging, "hashes")
+            )
         finally:
             hashes.unpersist()
-        open(sealed, "w").close()
 
-    _publish_staged(os.path.join(staging, "target"), target_path, batch_id)
-    _publish_staged(os.path.join(staging, "hashes"), index_path, batch_id)
-    os.makedirs(commit_dir, exist_ok=True)
-    open(committed, "w").close()
-    shutil.rmtree(staging, ignore_errors=True)
+    _exactly_once(
+        batch_df, batch_id, checkpoint_dir, "media_dhash", stage,
+        {"target": target_path, "hashes": index_path},
+    )
 
 
 def stream_image_dhash_ingest(
@@ -555,31 +556,20 @@ def stream_image_dhash_ingest(
     micro-batch is dHashed in the Arrow stage, near-dup-checked against
     the PERSISTED hash index (asymmetric band join — cost ∝ batch),
     self-deduped, and the survivors land in the curated zone while
-    their hashes append to the index. Exactly-once via the same
-    stage-seal-publish-commit protocol as
-    :func:`stream_near_dup_ingest` (shared `_publish_staged`); images
-    without a pure decoder (null dhash) are curated but never indexed
-    — undecodable is a quality signal, not a duplicate."""
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        media_dhash_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            index_path=index_path,
-            target_path=target_path,
-            checkpoint_dir=checkpoint_dir,
-            max_hamming=max_hamming,
-        )
-
-    stream = (
-        spark.readStream.format("parquet").schema(schema).load(source_dir)
+    their hashes append to the index, exactly-once via
+    :func:`_exactly_once`; images without a pure decoder (null dhash)
+    are curated but never indexed — undecodable is a quality signal,
+    not a duplicate."""
+    handle_batch = functools.partial(
+        media_dhash_handle_batch,
+        spark,
+        index_path=index_path,
+        target_path=target_path,
+        checkpoint_dir=checkpoint_dir,
+        max_hamming=max_hamming,
     )
-    return (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    stream = spark.readStream.format("parquet").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def cms_handle_batch(
@@ -596,34 +586,20 @@ def cms_handle_batch(
     """One exactly-once micro-batch of :func:`stream_cms_ingest`: sketch
     the batch's keys and append the cells as PARTIAL counts (sketch
     merge is cell summation, so partial cells are correct the same way
-    the near-dup index's ``shingle_dfs`` partials are). Same
-    stage-seal-publish-commit protocol as ``near_dup_handle_batch`` —
-    an appended-twice batch would silently double every frequency
-    estimate, so replay safety is load-bearing here too."""
+    the near-dup index's ``shingle_dfs`` partials are). Published via
+    :func:`_exactly_once` (namespace ``cms``) — an appended-twice batch
+    would silently double every frequency estimate."""
     from lakehouse_architecture_spark.operators.cms import cms_counters
 
-    commit_dir = os.path.join(checkpoint_dir, "cms_commits")
-    committed = os.path.join(commit_dir, f"batch-{batch_id}")
-    staging = os.path.join(checkpoint_dir, "cms_staging", str(batch_id))
-    if os.path.exists(committed):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    sealed = os.path.join(staging, "_STAGED")
+    def stage(staging: str) -> None:
+        cms_counters(batch_df, key_col, depth, width).write.parquet(
+            os.path.join(staging, "cells")
+        )
 
-    if not os.path.exists(sealed):
-        if batch_df.isEmpty():
-            os.makedirs(commit_dir, exist_ok=True)
-            open(committed, "w").close()
-            return
-        cms_counters(batch_df, key_col, depth, width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(staging, "cells"))
-        open(sealed, "w").close()
-
-    _publish_staged(os.path.join(staging, "cells"), sketch_path, batch_id)
-    os.makedirs(commit_dir, exist_ok=True)
-    open(committed, "w").close()
-    shutil.rmtree(staging, ignore_errors=True)
+    _exactly_once(
+        batch_df, batch_id, checkpoint_dir, "cms", stage,
+        {"cells": sketch_path},
+    )
 
 
 def stream_cms_ingest(
@@ -643,26 +619,17 @@ def stream_cms_ingest(
     (depth x width) cells no matter how much history has streamed
     through. The streaming twin of the batch mergeability property
     ``events_cms_topk_accuracy`` pins."""
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cms_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            sketch_path=sketch_path,
-            checkpoint_dir=checkpoint_dir,
-            key_col=key_col,
-            depth=depth,
-            width=width,
-        )
-
-    stream = (
-        spark.readStream.format("json").schema(schema).load(source_dir)
+    handle_batch = functools.partial(
+        cms_handle_batch,
+        spark,
+        sketch_path=sketch_path,
+        checkpoint_dir=checkpoint_dir,
+        key_col=key_col,
+        depth=depth,
+        width=width,
     )
-    return (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def stream_cdc_apply(
@@ -673,28 +640,22 @@ def stream_cdc_apply(
     keys: list[str],
     op_col: str = "op",
     partition_by: str | None = None,
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """Changefeed stream -> ``apply_changes`` per micro-batch: the
     continuous form of CDC table maintenance (Delta's APPLY CHANGES
     INTO). Each micro-batch is a net-change set — upserts replace,
     deletes remove, a key in both ends with the upsert's values — and
     because apply_changes re-applies idempotently, checkpoint replay
-    after a crash converges to the same table (the exactly-once
-    protocol of the other ingest jobs, without a staging ledger:
-    the batch rewrite itself is the commit).
+    after a crash converges to the same table (exactly-once without a
+    staging ledger: the batch rewrite itself is the commit).
 
     Scale contract is apply_changes': per micro-batch, one bounded
     partition-value collect and a rewrite of only the partitions the
     batch touches — a trickle of deletes never rewrites the table.
     """
     from lakehouse_architecture_spark.sinks.writers import apply_changes
-
-    stream = (
-        spark.readStream.format("json")
-        .schema(schema)
-        .load(source_dir)
-    )
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -708,12 +669,8 @@ def stream_cdc_apply(
             partition_by=partition_by,
         )
 
-    writer = stream.writeStream.foreachBatch(handle_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def stream_rollup_maintain(
@@ -723,7 +680,7 @@ def stream_rollup_maintain(
     state_path: str,
     keys: list[str],
     value: str,
-    checkpoint_dir: str | None = None,
+    checkpoint_dir: str,
 ):
     """Continuously maintain an EXACT per-key (count, decimal-sum)
     rollup from a file stream: each micro-batch aggregates to a
@@ -734,40 +691,19 @@ def stream_rollup_maintain(
     Batch cost is O(|state| + |batch|). Unlike the append-only ingest
     jobs, the fold is READ-MODIFY-WRITE, so naive checkpoint replay
     would double-count a batch that crashed between the state swap and
-    the offset commit. With ``checkpoint_dir`` set, each batch is
-    therefore EXACTLY-ONCE via the same stage-seal-publish-commit
-    protocol as :func:`near_dup_handle_batch`: already-committed batch
-    ids are skipped; the merged state is first written to a
-    batch-keyed staging directory under the checkpoint and sealed
-    (recompute-on-replay is safe before the seal because the prior
-    state is untouched); publish swaps the old state into a
-    DETERMINISTIC backup location inside staging so a crash anywhere
-    mid-swap resumes instead of losing state; the commit marker lands
-    last. Without a checkpoint the job is at-least-once (batch ids are
-    not stable across restarts, so markers cannot apply) — pass
-    ``checkpoint_dir`` for any state that must survive crashes.
+    the offset commit; :func:`_fold_batch_exactly_once` folds each batch
+    exactly once (namespace ``rollup``).
     """
-    stream = (
-        spark.readStream.format("json").schema(schema).load(source_dir)
+    handle_batch = functools.partial(
+        rollup_handle_batch,
+        spark,
+        state_path=state_path,
+        keys=keys,
+        value=value,
+        checkpoint_dir=checkpoint_dir,
     )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rollup_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            state_path=state_path,
-            keys=keys,
-            value=value,
-            checkpoint_dir=checkpoint_dir,
-        )
-
-    writer = stream.writeStream.foreachBatch(handle_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def _fold_batch_exactly_once(
@@ -776,69 +712,37 @@ def _fold_batch_exactly_once(
     batch_id: int,
     *,
     state_path: str,
-    checkpoint_dir: str | None,
+    checkpoint_dir: str,
     merged,
     ns: str,
 ) -> None:
-    """The shared read-modify-write fold protocol behind every
-    stateful-maintenance stream (exact rollup, KMV sketches): fold the
-    batch into the stored state EXACTLY-ONCE via stage-seal-publish-
-    commit (see :func:`stream_rollup_maintain`). ``merged`` is a
-    zero-arg callable building the (prior state + batch) DataFrame —
-    it must read prior state lazily so a replayed recompute before the
-    seal sees the untouched pre-batch state. ``ns`` namespaces the
-    commit/staging dirs so two folds can share one checkpoint."""
-    import uuid as _uuid
+    """The read-modify-write fold behind every stateful-maintenance
+    stream (exact rollup, KMV sketches), run by :func:`_exactly_once`:
+    the merged state is staged and sealed, then swapped in for the
+    stored state. ``merged`` is a zero-arg callable building the (prior
+    state + batch) DataFrame — it must read prior state lazily so a
+    replayed recompute before the seal sees the untouched pre-batch
+    state. Writing it to staging materializes the merge BEFORE any
+    swap."""
 
-    if checkpoint_dir is None:
-        # At-least-once fallback: no stable batch identity without a
-        # checkpoint, so commit markers cannot apply.
-        if batch_df.isEmpty():
-            return
-        # materialize BEFORE the swap: the merged plan reads the
-        # files the swap replaces
-        m = merged().localCheckpoint(eager=True)
-        staging = f"{state_path}.staging-{_uuid.uuid4().hex[:8]}"
-        m.write.mode("overwrite").parquet(staging)
-        _swap_staged(spark, state_path, staging)
-        return
+    def stage(staging: str) -> None:
+        merged().write.parquet(os.path.join(staging, "state"))
 
-    commit_dir = os.path.join(checkpoint_dir, f"{ns}_commits")
-    committed = os.path.join(commit_dir, f"batch-{batch_id}")
-    staging = os.path.join(checkpoint_dir, f"{ns}_staging", str(batch_id))
-    if os.path.exists(committed):
-        # exactly-once: this batch is already folded in — a replay
-        # after a crash between the marker and cleanup just sweeps.
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    sealed = os.path.join(staging, "_STAGED")
-    staged_state = os.path.join(staging, "state")
-    if not os.path.exists(sealed):
-        if batch_df.isEmpty():
-            os.makedirs(commit_dir, exist_ok=True)
-            open(committed, "w").close()
-            return
-        # Prior state is untouched until publish, so recomputing a
-        # crashed-mid-stage batch reads the same inputs. Writing to
-        # staging materializes the merge BEFORE any swap — no
-        # localCheckpoint needed.
-        shutil.rmtree(staging, ignore_errors=True)
-        merged().write.mode("overwrite").parquet(staged_state)
-        open(sealed, "w").close()
-    # Publish: each move is a same-filesystem rename; the backup
-    # location is DETERMINISTIC (inside this batch's staging), so
-    # replay after a crash at any point resumes the remaining moves
-    # instead of recomputing against half-swapped state.
-    if os.path.isdir(staged_state):
-        if _has_data(state_path):
-            shutil.move(state_path, os.path.join(staging, "old"))
-        if os.path.exists(state_path):
-            shutil.rmtree(state_path)
-        shutil.move(staged_state, state_path)
-    _refresh_swapped_path(spark, state_path)
-    os.makedirs(commit_dir, exist_ok=True)
-    open(committed, "w").close()
-    shutil.rmtree(staging, ignore_errors=True)
+    def publish(staging: str) -> None:
+        # Each move is a same-filesystem rename; the backup location is
+        # DETERMINISTIC (inside this batch's staging), so replay after a
+        # crash at any point resumes the remaining moves instead of
+        # recomputing against half-swapped state.
+        staged_state = os.path.join(staging, "state")
+        if os.path.isdir(staged_state):
+            if _has_data(state_path):
+                shutil.move(state_path, os.path.join(staging, "old"))
+            if os.path.exists(state_path):
+                shutil.rmtree(state_path)
+            shutil.move(staged_state, state_path)
+        _refresh_swapped_path(spark, state_path)
+
+    _exactly_once(batch_df, batch_id, checkpoint_dir, ns, stage, publish)
 
 
 def rollup_handle_batch(
@@ -849,7 +753,7 @@ def rollup_handle_batch(
     state_path: str,
     keys: list[str],
     value: str,
-    checkpoint_dir: str | None,
+    checkpoint_dir: str,
 ) -> None:
     """One micro-batch of :func:`stream_rollup_maintain` (module-level
     so replay/crash scenarios are directly testable — the
@@ -886,7 +790,8 @@ def stream_kmv_daily_maintain(
     group_col: str,
     cell_col: str,
     k: int = 128,
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
 ):
     """Continuously maintain per-group KMV distinct sketches from a
     file stream — the streaming twin of ``events_kmv_daily_rollup``'s
@@ -904,31 +809,19 @@ def stream_kmv_daily_maintain(
     estimate with ``kmv_estimate_from_sketch`` (exact below k by
     construction). Batch cost: one distinct + two-stage top-k on the
     BATCH plus a |groups|-row outer-join fold — never a history
-    rescan; read-modify-write is exactly-once via the same
-    stage-seal-publish-commit protocol as :func:`stream_rollup_maintain`
-    (pass ``checkpoint_dir``; without it the fold is at-least-once)."""
-    stream = (
-        spark.readStream.format("json").schema(schema).load(source_dir)
+    rescan; the read-modify-write is folded exactly once by
+    :func:`_fold_batch_exactly_once` (namespace ``kmv``)."""
+    handle_batch = functools.partial(
+        kmv_handle_batch,
+        spark,
+        state_path=state_path,
+        group_col=group_col,
+        cell_col=cell_col,
+        k=k,
+        checkpoint_dir=checkpoint_dir,
     )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        kmv_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            state_path=state_path,
-            group_col=group_col,
-            cell_col=cell_col,
-            k=k,
-            checkpoint_dir=checkpoint_dir,
-        )
-
-    writer = stream.writeStream.foreachBatch(handle_batch).trigger(
-        availableNow=True
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def kmv_handle_batch(
@@ -940,7 +833,7 @@ def kmv_handle_batch(
     group_col: str,
     cell_col: str,
     k: int,
-    checkpoint_dir: str | None,
+    checkpoint_dir: str,
 ) -> None:
     """One micro-batch of :func:`stream_kmv_daily_maintain`
     (module-level so replay/crash scenarios are directly testable)."""
@@ -1003,8 +896,8 @@ def stream_span_dedup_ingest(
     Completes the family triad the MinHash operators established:
     batch query, asymmetric incremental query, exactly-once stream.
 
-    Per micro-batch (exactly-once via the near_dup stage-seal-
-    publish-commit protocol — see stream_near_dup_ingest):
+    Per micro-batch (exactly-once via :func:`_exactly_once`, namespace
+    ``span_dedup``):
 
     1. corpus check: batch spans LEFT JOIN the index's distinct span
        relation — cost ∝ batch spans, the corpus is never re-shingled;
@@ -1014,32 +907,23 @@ def stream_span_dedup_ingest(
        and order-independent (one min-aggregate + one join), the
        keep-lowest-id election at span grain;
     3. survivors are staged (rows -> target staging, their DISTINCT
-       spans -> index staging), sealed, published by atomic rename,
-       and the commit marker lands last. The index is an append-only
-       single-column (span) relation, so publishing partials is
-       mergeable by construction — consumers read it DISTINCT.
+       spans -> index staging) and published. The index is an
+       append-only single-column (span) relation, so publishing
+       partials is mergeable by construction — consumers read it
+       DISTINCT.
     """
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        span_dedup_handle_batch(
-            spark,
-            batch_df,
-            batch_id,
-            index_path=index_path,
-            target_path=target_path,
-            checkpoint_dir=checkpoint_dir,
-            text_col=text_col,
-            id_col=id_col,
-            k=k,
-        )
-
-    stream = (
-        spark.readStream.format("json").schema(schema).load(source_dir)
+    handle_batch = functools.partial(
+        span_dedup_handle_batch,
+        spark,
+        index_path=index_path,
+        target_path=target_path,
+        checkpoint_dir=checkpoint_dir,
+        text_col=text_col,
+        id_col=id_col,
+        k=k,
     )
-    return (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    stream = spark.readStream.format("json").schema(schema).load(source_dir)
+    return _foreach_batch(stream, handle_batch, checkpoint_dir)
 
 
 def span_dedup_handle_batch(
@@ -1061,21 +945,7 @@ def span_dedup_handle_batch(
         word_spans,
     )
 
-    commit_dir = os.path.join(checkpoint_dir, "span_dedup_commits")
-    committed = os.path.join(commit_dir, f"batch-{batch_id}")
-    staging = os.path.join(checkpoint_dir, "span_dedup_staging", str(batch_id))
-    if os.path.exists(committed):
-        shutil.rmtree(staging, ignore_errors=True)
-        return
-    sealed = os.path.join(staging, "_STAGED")
-
-    if not os.path.exists(sealed):
-        if batch_df.isEmpty():
-            os.makedirs(commit_dir, exist_ok=True)
-            open(committed, "w").close()
-            return
-        # Recompute-on-replay is safe before the seal: nothing of this
-        # batch is visible to the index or the curated zone yet.
+    def stage(staging: str) -> None:
         spans = word_spans(
             batch_df, k, text_col=text_col, id_col=id_col
         ).persist()
@@ -1122,22 +992,16 @@ def span_dedup_handle_batch(
                 id_col,
                 "left_anti",
             )
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(staging, "target")
-            )
+            survivors.write.parquet(os.path.join(staging, "target"))
             # survivors' spans, DISTINCT at span grain: the index is a
             # single-column set relation, append-mergeable
             s1_spans.join(internal_rejected, id_col, "left_anti").select(
                 "span"
-            ).distinct().write.mode("overwrite").parquet(
-                os.path.join(staging, "spans")
-            )
+            ).distinct().write.parquet(os.path.join(staging, "spans"))
         finally:
             spans.unpersist()
-        open(sealed, "w").close()
 
-    _publish_staged(os.path.join(staging, "target"), target_path, batch_id)
-    _publish_staged(os.path.join(staging, "spans"), index_path, batch_id)
-    os.makedirs(commit_dir, exist_ok=True)
-    open(committed, "w").close()
-    shutil.rmtree(staging, ignore_errors=True)
+    _exactly_once(
+        batch_df, batch_id, checkpoint_dir, "span_dedup", stage,
+        {"target": target_path, "spans": index_path},
+    )

@@ -145,6 +145,47 @@ def test_run_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert results2["order_items"].stats["clean_rows"] == 2
 
 
+def test_pipeline_jobs_carry_their_call_site_in_every_thread(
+    spark, tmp_path, jobs_launched, monkeypatch
+):
+    """Products and orders run off the calling thread. Their jobs must
+    stay in the caller's job group and be named by the pipeline line
+    that launched them, like order_items' on the calling thread: the
+    LIMIT-5 probe's ``collect at .../plans/pipeline.py`` once per table,
+    and no job named after a thread wrapper. Each table lands in one
+    partition, so each probe is one job. The pool gets one worker:
+    PySpark's call-site counter is process-wide, so a job launched while
+    another thread is inside a Spark call can keep the JVM's own name."""
+    import concurrent.futures
+
+    class OneWorker(concurrent.futures.ThreadPoolExecutor):
+        def __init__(self, max_workers=None):
+            super().__init__(max_workers=1)
+
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor", OneWorker)
+    raw = {
+        "products": _write(tmp_path, "products", PRODUCTS_CSV, ["1,4,Books,P1"]),
+        "orders": _write(
+            tmp_path, "orders", ORDERS_CSV,
+            ["90,501,1990,2025-04-01T11:27:00,229.53,2025-04-01"],
+        ),
+        "order_items": _write(
+            tmp_path, "order_items", ITEMS_CSV,
+            ["1,501,1990,10,1,1,0,2025-04-01T11:27:00,2025-04-01"],
+        ),
+    }
+    jobs = jobs_launched(lambda: run_pipeline(
+        spark, raw, str(tmp_path / "curated"), str(tmp_path / "rejected")
+    ))
+    assert [j for j in jobs if j.startswith("wrapped at")] == []
+    probes = [
+        j for j in jobs
+        if j.startswith("collect at")
+        and j.split(":")[0].endswith(os.path.join("plans", "pipeline.py"))
+    ]
+    assert len(probes) == 3, jobs
+
+
 def test_process_dataset_evaluates_the_batch_once(spark, tmp_path, jobs_launched):
     """The corrupt filter, the cast, the rules, the FK joins and the PK
     dedup run in one action: the clean and rejected frames read its
@@ -355,8 +396,7 @@ def test_pipeline_over_many_date_partitions_launches_no_listing_job(
     assert jobs, "the cycle launched no job at all: nothing was counted"
     assert [j for j in jobs if j.startswith("Listing leaf files")] == []
     # the MERGE prunes by the partitions the batch's action observed; it
-    # collects none of its own (jobs of the products and orders threads
-    # are named by the thread's call site, order_items' by their own)
+    # collects none of its own
     assert [
         j for j in jobs
         if j.startswith("collect at") and j.split(":")[0].endswith("sinks/writers.py")

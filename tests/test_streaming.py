@@ -4,8 +4,10 @@ with availableNow triggers so they run deterministically in CI."""
 
 from __future__ import annotations
 
+import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.operators.validation import PositiveRule
@@ -171,6 +173,88 @@ def test_near_dup_batch_replay_exactly_once(spark, tmp_path, monkeypatch):
     ]
 
 
+def _cms_case(spark, tmp_path):
+    from lakehouse_architecture_spark.operators.cms import cms_counters
+    from lakehouse_architecture_spark.streaming.jobs import cms_handle_batch
+
+    batch = spark.createDataFrame([(1,), (1,), (2,), (3,)], "user_id long")
+    sketch = str(tmp_path / "sketch")
+
+    def handle(ckpt):
+        cms_handle_batch(
+            spark, batch, 0, sketch_path=sketch, checkpoint_dir=ckpt,
+            key_col="user_id", depth=3, width=32,
+        )
+
+    def cells(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    return (
+        handle,
+        lambda: [cells(spark.read.parquet(sketch))],
+        [cells(cms_counters(batch, "user_id", 3, 32))],
+    )
+
+
+def _media_dhash_case(spark, tmp_path):
+    from tests.test_multimodal import _gradient_png
+
+    from lakehouse_architecture_spark.streaming.jobs import (
+        media_dhash_handle_batch,
+    )
+
+    batch = spark.createDataFrame(
+        [(1, _gradient_png()), (2, _gradient_png(seed=97))],
+        "media_id long, payload binary",
+    )
+    curated, index = str(tmp_path / "curated"), str(tmp_path / "index")
+
+    def handle(ckpt):
+        media_dhash_handle_batch(
+            spark, batch, 0, index_path=index, target_path=curated,
+            checkpoint_dir=ckpt,
+        )
+
+    def ids(path):
+        return sorted(r.media_id for r in spark.read.parquet(path).collect())
+
+    return handle, lambda: [ids(curated), ids(index)], [[1, 2], [1, 2]]
+
+
+@pytest.mark.parametrize(
+    "ns, case", [("cms", _cms_case), ("media_dhash", _media_dhash_case)]
+)
+def test_batch_crash_mid_publish_replays_exactly_once(
+    spark, tmp_path, monkeypatch, ns, case
+):
+    """A crash in publish, after the batch's first output has moved into
+    place and before the commit marker: the replay resumes the sealed
+    staging, so every output lands exactly once, and the marker appears
+    only with the replay."""
+    from lakehouse_architecture_spark.streaming import jobs
+
+    handle, outputs, want = case(spark, tmp_path)
+    ckpt = str(tmp_path / "ckpt")
+    marker = os.path.join(ckpt, f"{ns}_commits", "batch-0")
+    real_publish = jobs._publish_staged
+
+    def crash_after_first_output(staged_sub, dest_dir, batch_id):
+        real_publish(staged_sub, dest_dir, batch_id)
+        raise OSError("simulated crash after the first output")
+
+    monkeypatch.setattr(jobs, "_publish_staged", crash_after_first_output)
+    with pytest.raises(OSError):
+        handle(ckpt)
+    monkeypatch.setattr(jobs, "_publish_staged", real_publish)
+    assert not os.path.exists(marker)
+
+    handle(ckpt)
+    assert os.path.exists(marker)
+    assert outputs() == want
+    handle(ckpt)  # a replay of the committed batch is a no-op
+    assert outputs() == want
+
+
 def test_stream_ingest_merge_idempotent(spark, tmp_path):
     src = tmp_path / "incoming"
     src.mkdir()
@@ -256,6 +340,44 @@ def test_stream_ingest_merge_matches_batch_pipeline(spark, tmp_path):
     assert len(rej) == 1
     assert rej[0].order_num == 3 and rej[0].validation_errors == "Null order_id"
     assert rej[0].source == "orders" and rej[0].rejection_time is not None
+
+
+def test_stream_ingest_merge_replay_lands_rejections_once(spark, tmp_path):
+    """A crash after the sink and before Spark commits the batch
+    replays it under the same id. The MERGE is idempotent; the rejected
+    rows are an append and must land once too."""
+    src = tmp_path / "incoming"
+    src.mkdir()
+    (src / "day1.csv").write_text(
+        CSV_HEADER
+        + "1,501,10,2025-04-01T10:00:00,100.0,2025-04-01\n"
+        + "2,502,11,2025-04-01T11:00:00,-50.0,2025-04-01\n"  # invalid
+    )
+    target = str(tmp_path / "curated")
+    rejected = str(tmp_path / "rejected")
+    ckpt = tmp_path / "ckpt"
+
+    def run():
+        q = stream_csv_ingest_merge(
+            spark,
+            str(src),
+            ORDERS_SCHEMA,
+            target,
+            keys=["order_id"],
+            partition_by="date",
+            checkpoint_dir=str(ckpt),
+            rules=[PositiveRule("total_amount")],
+            rejected_path=rejected,
+        ).start()
+        _await(q)
+
+    run()
+    # the crash: Spark's commit of batch 0 never landed
+    (ckpt / "commits" / "0").unlink()
+    (ckpt / "commits" / ".0.crc").unlink()
+    run()
+    assert spark.read.parquet(target).count() == 1
+    assert spark.read.parquet(f"{rejected}/stream_rejected").count() == 1
 
 
 def test_stream_hourly_counts_watermarked(spark, tmp_path):
