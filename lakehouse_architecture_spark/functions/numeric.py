@@ -39,15 +39,3 @@ def davg(col: str | Column, scale: int = 4) -> Column:
 
 def round6(c: Column) -> Column:
     return F.round(c, 6)
-
-
-def sql_dsum(expr: str, scale: int = 4) -> str:
-    """DuckDB-side twin of :func:`dsum` for oracle SQL strings."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-
-
-def sql_davg(expr: str, scale: int = 4) -> str:
-    return (
-        f"(CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}))"
-    )

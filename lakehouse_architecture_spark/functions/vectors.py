@@ -20,32 +20,6 @@ def dot(a: str | Column, b: str | Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def dot_fixed(a: str | Column, b: str | Column, dim: int) -> Column:
-    """Dot product for a KNOWN dimension, unrolled to a flat
-    ``a[1]*b[1] + ... + a[dim]*b[dim]`` expression.
-
-    ``zip_with`` + ``aggregate`` materializes a dim-element product
-    array per evaluation; in an O(n^2) pair prefilter that allocation
-    happens millions of times per task and dominates. The unrolled sum
-    is pure register arithmetic under whole-stage codegen (measured
-    ~15% off the all-pairs prefilter wall at sf0.1, after a one-time
-    codegen compile of the wider expression). Use only where the
-    dimension is statically known AND the operands are RAW scan
-    columns: element_at over a COMPUTED array (e.g. a unit-vector
-    transform) can re-evaluate the producing expression per element —
-    a measured 10x blow-up; use :func:`dot` (one zip_with pass) there.
-    """
-    from functools import reduce
-
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    terms = [
-        F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-        for i in range(1, dim + 1)
-    ]
-    return reduce(lambda x, y: x + y, terms)
-
-
 def dec_dot(a: str | Column, b: str | Column) -> Column:
     """Bit-reproducible dot product, still a JVM-side fold (no explode).
 

@@ -20,8 +20,10 @@ cluster). Per iteration:
   (``F.aggregate`` with a ``try_element_at(acc, -1)`` lookback) — the
   exact semantics of the reference implementation, including
   non-overlapping "aaa" -> ["aa", "a"];
-- the vocabulary is ``localCheckpoint``-ed each step so plan lineage
-  stays flat across iterations (the PCA/components discipline).
+- the vocabulary is materialized each step by
+  ``operators.iterative.loop_round``, so plan lineage stays flat across
+  iterations and the superseded step's blocks are freed at once (the
+  graph loops' discipline).
 
 Determinism: ties on pair count break on (pair_a, pair_b) string order,
 pinned identically in the pure-Python reference implementation that the
@@ -34,6 +36,11 @@ from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from lakehouse_architecture_spark.operators.iterative import (
+    _free_local_checkpoint,
+    loop_round,
+)
 
 
 def _merge_fold(syms, a: str, b: str):
@@ -77,11 +84,8 @@ def train_bpe(
     traffic per iteration is exactly one row (the argmax pair). Pass a
     precomputed :func:`word_frequencies` result as ``freqs`` to share
     the corpus pass with other consumers (the QA query does)."""
-    vocab = (
-        (freqs if freqs is not None else word_frequencies(df, text_col))
-        .select("cnt", F.split("word", "").alias("syms"))
-        .localCheckpoint(eager=True)
-    )
+    words = freqs if freqs is not None else word_frequencies(df, text_col)
+    vocab, _ = loop_round(words.select("cnt", F.split("word", "").alias("syms")))
     merges: list[dict] = []
     for rank in range(num_merges):
         pairs = vocab.select(
@@ -114,9 +118,9 @@ def train_bpe(
                 "pair_count": n,
             }
         )
-        vocab = vocab.select(
-            "cnt", _merge_fold(F.col("syms"), a, b).alias("syms")
-        ).localCheckpoint(eager=True)
+        merged = vocab.select("cnt", _merge_fold(F.col("syms"), a, b).alias("syms"))
+        vocab, _ = loop_round(merged, prev=vocab)
+    _free_local_checkpoint(vocab)
     return merges
 
 

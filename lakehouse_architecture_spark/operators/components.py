@@ -15,12 +15,13 @@ this terminates in a handful of shuffles even on billion-edge graphs.
 
 Scale design: each round is one join (edges x labels, shuffle on the
 join key) plus one groupBy-min (map-side partial). Rounds are
-materialized via ``operators.iterative.loop_round`` (lineage
+materialized via ``operators.iterative.fixpoint`` (lineage
 truncation + explicit release of the superseded round's blocks; pass
 ``checkpoint_dir`` for the executor-loss-safe reliable mode on a real
-cluster), matching pagerank/kcore/degeneracy. The convergence probe
-reads ONLY the new round (each round carries its predecessor's label
-as ``comp_prev``), so the old round is dead the moment the new one
+cluster), matching pagerank/kcore/degeneracy. Each round carries its
+predecessor's label as ``comp_prev``, and its changed count is an
+``observe()`` aggregate on the round's own checkpoint: a round is one
+Spark action, and the old round is dead the moment the new one
 materializes — no node-grain probe join.
 """
 
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_spark.operators.iterative import loop_round
+from lakehouse_architecture_spark.operators.iterative import BROADCAST_CAP, fixpoint
 
 
 def connected_components(
@@ -56,7 +57,7 @@ def connected_components(
     # hash-partitioned by the AGGREGATE key ``b`` and persisted (an
     # InMemoryRelation preserves outputPartitioning), and the
     # node-grain label relation is broadcast into the propagation join
-    # while |V| fits (2M cap) — the join then runs in place and its
+    # while |V| fits (BROADCAST_CAP) — the join then runs in place and its
     # output stays b-partitioned, so the per-round min-label aggregate
     # exchanges nothing edge-sized. The old union+groupBy folded the
     # label relation into the |E|-row aggregate; folding it instead
@@ -69,57 +70,41 @@ def connected_components(
         .repartition(n_part, "b")
         .persist()
     )
-    # labels_cp is the round's CHECKPOINTED relation (the thing whose
-    # blocks loop_round frees once the next round materializes);
-    # labels is at most a projection over it.
-    labels_cp = loop_round(
-        sym.select(F.col("a").alias("doc"))
-        .distinct()
-        .withColumn("comp", F.col("doc")),
-        checkpoint_dir=checkpoint_dir,
-    )
-    labels = labels_cp
-    bcast_labels = labels.count() <= 2_000_000
-    converged = False
-    for _ in range(max_iter):
+    nodes = sym.select(F.col("a").alias("doc")).distinct()
+    no_label = F.lit(None).cast(sym.schema["a"].dataType)
+    init = nodes.withColumns({"comp": F.col("doc"), "comp_prev": no_label})
+
+    def propagate(labels: DataFrame, cert: dict) -> DataFrame:
         lab_a = labels.select(F.col("doc").alias("a"), "comp")
+        if cert["n_nodes"] <= BROADCAST_CAP:
+            lab_a = F.broadcast(lab_a)
         prop_min = (
-            sym.join(F.broadcast(lab_a) if bcast_labels else lab_a, "a")
+            sym.join(lab_a, "a")
             .select(F.col("b").alias("doc"), "comp")
             .groupBy("doc")
             .agg(F.min("comp").alias("pcomp"))
+            .hint("merge")  # see operators/iterative.py, rule 1
         )
-        new = (
-            labels.join(prop_min, "doc", "left")
-            .select(
-                "doc",
-                F.least(
-                    F.col("comp"), F.coalesce("pcomp", F.col("comp"))
-                ).alias("comp"),
-                F.col("comp").alias("comp_prev"),
-            )
+        return labels.join(prop_min, "doc", "left").select(
+            "doc",
+            F.least(F.col("comp"), F.coalesce("pcomp", F.col("comp"))).alias("comp"),
+            F.col("comp").alias("comp_prev"),
         )
-        new_cp = loop_round(
-            new, prev=labels_cp, checkpoint_dir=checkpoint_dir
-        )
-        changed = (
-            new_cp.filter(F.col("comp") < F.col("comp_prev"))
-            .limit(1)
-            .count()
-        )
-        labels_cp = new_cp
-        labels = new_cp.drop("comp_prev")
-        if changed == 0:
-            converged = True
-            break
+
+    certificate = [
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.count_if(F.col("comp") != F.col("comp_prev")).alias("changed"),
+    ]
+    unchanged = lambda _, cert: cert["changed"] == 0  # noqa: E731
+    fp = fixpoint(init, propagate, certificate, max_iter, unchanged, checkpoint_dir)
     sym.unpersist()
-    if not converged:
+    if not fp.converged:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(component diameter exceeds the iteration budget); raise "
             "max_iter"
         )
-    return labels
+    return fp.state.drop("comp_prev")
 
 
 def dedup_keep_one_per_component(

@@ -8,14 +8,15 @@ degree < k until a fixpoint. Distributed shape per round: one
 degree aggregate (both edge orientations unioned, one shuffle) and two
 left-semi joins filtering the edge relation to surviving endpoints —
 the edge relation only ever SHRINKS, so round cost is bounded by the
-current subgraph, and each round materializes via
-``operators.iterative.loop_round`` (lineage truncation + explicit
-release of the superseded round's blocks; pass ``checkpoint_dir`` for
-the executor-loss-safe reliable variant on real clusters — see that
-module's durability caveat). Rounds are data-bounded (the peel
-terminates in at most the longest degeneracy-ordering chain; single
-digits on every corpus measured), and the loop is driver-bounded by
-``max_rounds``.
+current subgraph. Each round is one ``operators.iterative.fixpoint``
+round: its checkpoint is its only Spark action, and the edge count
+that tests convergence is observed on it (lineage truncation +
+explicit release of the superseded round's blocks; pass
+``checkpoint_dir`` for the executor-loss-safe reliable variant on real
+clusters — see that module's durability caveat). Rounds are
+data-bounded (the peel terminates in at most the longest
+degeneracy-ordering chain; single digits on every corpus measured),
+and the loop is capped by ``max_rounds``.
 
 Fixpoint idempotence is the cross-engine contract: peeling past
 convergence changes nothing, so an oracle that unrolls a FIXED number
@@ -34,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_spark.operators.iterative import loop_round
+from lakehouse_architecture_spark.operators.iterative import BROADCAST_CAP, fixpoint
 
 
 def kcore_peel(
@@ -46,22 +47,19 @@ def kcore_peel(
     """Peel ``edges`` (undirected, ``src < dst``, distinct) to the
     k-core fixpoint.
 
-    Returns ``{"edges", "rounds", "converged", "n_edges"}`` where
-    ``rounds`` is the first round whose peel removed nothing (the
+    Returns ``{"edges", "rounds", "converged", "n_edges", "trace"}``
+    where ``rounds`` is the first round whose peel removed nothing (the
     convergence round), or ``max_rounds`` with ``converged=False`` if
     the loop was cut off early — callers comparing against an unrolled
     oracle should emit both so a depth shortfall reads as an honest
-    mismatch, not a silent wrong answer. ``checkpoint_dir`` selects
-    reliable round checkpoints for cluster runs (identical cores,
-    executor-loss-safe; see operators/iterative.py).
+    mismatch, not a silent wrong answer. ``trace[r]`` is round r's
+    observed certificate, its edge count ``n_edges``.
+    ``checkpoint_dir`` selects reliable round checkpoints for cluster
+    runs (identical cores, executor-loss-safe; see
+    operators/iterative.py).
     """
-    cur = loop_round(
-        edges.select("src", "dst"), checkpoint_dir=checkpoint_dir
-    )
-    prev_cnt = cur.count()
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
+
+    def peel(cur: DataFrame, cert: dict) -> DataFrame:
         deg = (
             cur.select(F.col("src").alias("node"))
             .unionAll(cur.select(F.col("dst").alias("node")))
@@ -70,39 +68,33 @@ def kcore_peel(
         )
         keep = deg.filter(F.col("d") >= k).select("node")
         # Broadcast the surviving-node relation while it provably fits
-        # (r17, guide §3.1/§2.4): |keep| <= 2·|edges|, and the loop
-        # knows the current edge count exactly — under the cap both
+        # (r17, guide §3.1/§2.4): |keep| <= 2·|edges|, and the round's
+        # certificate knows the edge count exactly — under the cap both
         # semi-joins become broadcast semis and the (heavy, shrinking)
         # edge relation is never exchanged in a round; above it, the
-        # shuffle pair is the 100 TB shape. Same node-side cap
-        # doctrine as the pagerank/core-numbers share broadcast.
+        # shuffle pair is the 100 TB shape.
         keep_src = keep.withColumnRenamed("node", "src")
         keep_dst = keep.withColumnRenamed("node", "dst")
-        if prev_cnt <= 1_000_000:
+        if 2 * cert["n_edges"] <= BROADCAST_CAP:
             keep_src = F.broadcast(keep_src)
             keep_dst = F.broadcast(keep_dst)
-        nxt = loop_round(
+        return (
             cur.join(keep_src, "src", "left_semi")
             .join(keep_dst, "dst", "left_semi")
-            .select("src", "dst"),
-            prev=cur,
-            checkpoint_dir=checkpoint_dir,
+            .select("src", "dst")
         )
-        cnt = nxt.count()
-        rounds += 1
-        cur = nxt
-        if cnt == prev_cnt:
-            # peeling only removes edges, so equal counts mean equal
-            # sets: fixpoint reached
-            converged = True
-            prev_cnt = cnt
-            break
-        prev_cnt = cnt
+
+    certificate = [F.count(F.lit(1)).alias("n_edges")]
+    # peeling only removes edges, so equal counts mean equal sets
+    unchanged = lambda prev, cert: cert["n_edges"] == prev["n_edges"]  # noqa: E731
+    init = edges.select("src", "dst")
+    fp = fixpoint(init, peel, certificate, max_rounds, unchanged, checkpoint_dir)
     return {
-        "edges": cur,
-        "rounds": rounds,
-        "converged": converged,
-        "n_edges": prev_cnt,
+        "edges": fp.state,
+        "rounds": fp.rounds,
+        "converged": fp.converged,
+        "n_edges": fp.trace[-1]["n_edges"],
+        "trace": fp.trace,
     }
 
 
@@ -115,7 +107,7 @@ def _hindex_round(
     node subset). Returns ``(node, c)`` for exactly the swept nodes.
 
     Plan shape (asserted by tests/test_plans.py), two regimes chosen
-    by the CALLER (which knows |V| exactly from the loop's own count):
+    by the CALLER (which knows |V| exactly from its round certificate):
 
     - ``broadcast_values=True`` — the node-values relation is
       explicitly broadcast, so the 2|E|-row adjacency is never
@@ -194,17 +186,20 @@ def core_numbers(
     PARTITIONED BY node over those rows (descending value; ties are
     order-insensitive for the H statistic, so the result is
     deterministic) — never a per-node collect_list, so executor
-    memory is flat in max degree. Rounds materialize via
-    :func:`operators.iterative.loop_round` (block release +
-    ``checkpoint_dir`` reliable option).
+    memory is flat in max degree. Rounds run on
+    :func:`operators.iterative.fixpoint` (block release +
+    ``checkpoint_dir`` reliable option); the changed count that tests
+    convergence is observed on the round's own checkpoint, so a round
+    is one Spark action.
 
     Per-round plan economics — MEASURED r13 at the sf0.1 co-order
     graph (2.39M adjacency rows, 20k nodes, depth 38), because the
     r12 hypothesis ("late near-converged sweeps dominate, delta-
     iterate the frontier") turned out WRONG on real data:
 
-    - A round's fixed cost (loop_round materialization + the changed
-      count) is ~0.2 s; a full h-index sweep ~1.45 s — edge volume is
+    - A round's fixed cost (its materialization, then still followed
+      by a separate changed-count action) was ~0.2 s; a full h-index
+      sweep ~1.45 s — edge volume is
       the cost, so a worklist LOOKED right.
     - But the worklist LOST both ways it was built. As plain
       semi-joins (adjacency ⋉ changed-set, then adjacency ⋉ frontier)
@@ -235,7 +230,9 @@ def core_numbers(
     converged=false on both engines.
 
     Returns ``{"cores": DataFrame(node, c), "rounds", "converged",
-    "n_nodes"}``; ``c`` is exact (long).
+    "n_nodes", "trace"}``; ``c`` is exact (long). ``trace[r]`` is
+    round r's observed certificate: ``n_nodes`` and ``changed``, the
+    nodes whose value the round moved (0 on round 0).
     """
     e = edges.select("src", "dst")
     spark = edges.sparkSession
@@ -247,8 +244,8 @@ def core_numbers(
     # outputPartitioning (observed: the window re-exchanges 2|E| rows
     # every sweep), while an InMemoryRelation keeps its child plan's
     # partitioning, so broadcast-join + window + aggregate all run in
-    # place. Unpersisted after convergence (the returned cores
-    # relation is self-contained in the final round's checkpoint).
+    # place. Unpersisted after the loop (the returned cores relation
+    # is self-contained in the final round's checkpoint).
     adj = (
         e.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
         .unionAll(
@@ -257,48 +254,38 @@ def core_numbers(
         .repartition(n_part, "node")
         .persist()
     )
-    # cur_cp is the round's CHECKPOINTED relation (the freeable leaf);
-    # cur is at most a projection over it
-    cur_cp = loop_round(
-        adj.groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("c")),
-        checkpoint_dir=checkpoint_dir,
+    init = adj.groupBy("node").agg(
+        F.count(F.lit(1)).cast("long").alias("c"),
+        F.lit(None).cast("long").alias("c_prev"),
     )
-    cur = cur_cp
-    n_nodes = cur_cp.count()
-    rounds = 0
-    converged = False
-    # Broadcasting the node-values relation per sweep is the win (see
-    # class docstring), but only while |V| comfortably fits a
-    # broadcast: ~2M (node, value) long-pairs ≈ 32 MB. Beyond that,
-    # the pinned shuffle_hash fallback is the cluster-scale plan.
-    bcast_values = n_nodes <= 2_000_000
-    while rounds < max_rounds:
+
+    def sweep(cur: DataFrame, cert: dict) -> DataFrame:
+        # broadcasting the node values is the win (see the docstring)
+        # while |V| fits the cap; beyond it, the pinned shuffle_hash
+        # fallback is the cluster-scale plan
         new_vals = _hindex_round(
-            adj, cur, broadcast_values=bcast_values
+            adj, cur, broadcast_values=cert["n_nodes"] <= BROADCAST_CAP
         ).withColumnRenamed("c", "c_new")
-        nxt = loop_round(
-            cur.join(new_vals, "node", "left").select(
-                "node",
-                F.coalesce("c_new", "c").cast("long").alias("c"),
-                F.col("c").alias("c_prev"),
-            ),
-            prev=cur_cp,
-            checkpoint_dir=checkpoint_dir,
+        new_vals = new_vals.hint("merge")  # see operators/iterative.py, rule 1
+        return cur.join(new_vals, "node", "left").select(
+            "node",
+            F.coalesce("c_new", "c").cast("long").alias("c"),
+            F.col("c").alias("c_prev"),
         )
-        changed = nxt.filter(F.col("c") != F.col("c_prev")).count()
-        rounds += 1
-        cur_cp = nxt
-        cur = nxt.select("node", "c")
-        if changed == 0:
-            converged = True
-            break
+
+    certificate = [
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.count_if(F.col("c") != F.col("c_prev")).alias("changed"),
+    ]
+    unchanged = lambda _, cert: cert["changed"] == 0  # noqa: E731
+    fp = fixpoint(init, sweep, certificate, max_rounds, unchanged, checkpoint_dir)
     # cores is a projection over the (self-contained) checkpointed
     # final round — the adjacency's cached blocks are dead weight now
     adj.unpersist(blocking=False)
     return {
-        "cores": cur,
-        "rounds": rounds,
-        "converged": converged,
-        "n_nodes": n_nodes,
+        "cores": fp.state.select("node", "c"),
+        "rounds": fp.rounds,
+        "converged": fp.converged,
+        "n_nodes": fp.trace[0]["n_nodes"],
+        "trace": fp.trace,
     }

@@ -17,12 +17,13 @@ counts out-edges; or a column, ``wdeg`` = Σ w), the start and teleport
 vector s (1, or the seed measure ``sv``), the share of the dangling
 mass m, the rank parked on nodes without out-edges (m / n, or m · sv),
 and the column the ranks carry (``deg``, ``wdeg`` or ``sv``). A round
-is ONE edge-keyed join + ONE dst-keyed aggregate; m rides the round's
-1-row certificate collect as a carried Python double. Rounds
-materialize via operators.iterative.loop_round (lineage truncation +
-release of the superseded round's blocks; ``checkpoint_dir`` selects
-the executor-loss-safe reliable variant for cluster runs), so plan
-depth and executor storage stay flat. Total mass is conserved (n, or
+is ONE edge-keyed join + ONE dst-keyed aggregate, and its only Spark
+action is its checkpoint: m and the residual max |Δpr| are
+``observe()`` aggregates on it, read back as the round's certificate
+(operators.iterative.fixpoint: lineage truncation + release of the
+superseded round's blocks; ``checkpoint_dir`` selects the
+executor-loss-safe reliable variant for cluster runs), so plan depth
+and executor storage stay flat. Total mass is conserved (n, or
 1 when seeded) modulo float addition; the QA queries pin it as an
 oracle boolean alongside the convergence residual.
 
@@ -30,7 +31,7 @@ Exchange-free rounds (the recipe measured on the core-numbers loop):
 the edge relation is hash-partitioned by ``dst`` ONCE and PERSISTED
 (an InMemoryRelation preserves outputPartitioning; a checkpointed
 LogicalRDD reports it unknown), and each round's node-grain share
-relation is explicitly BROADCAST while |V| fits (cap 2M rows). The
+relation is explicitly BROADCAST while |V| fits (``BROADCAST_CAP``). The
 contribution join then never exchanges the edge relation, its output
 stays dst-partitioned, and the dst aggregate runs in place: a round's
 heavy relation is SCANNED, not shuffled. Above the cap the join falls
@@ -45,7 +46,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lakehouse_architecture_spark.operators.iterative import loop_round
+from lakehouse_architecture_spark.operators.iterative import (
+    BROADCAST_CAP,
+    Fixpoint,
+    fixpoint,
+)
 
 
 def _dst_partitioned(
@@ -61,39 +66,30 @@ def _dst_partitioned(
     return edges.select(*cols).repartition(n_part, "dst").persist()
 
 
-def _node_set(e: DataFrame, checkpoint_dir: str | None) -> tuple[DataFrame, int]:
-    """The checkpointed node set of ``e`` and its size. Raises
-    ``ValueError`` (after unpersisting ``e``) on a null endpoint: rank
-    sent to a null ``dst`` never joins back to a node, so mass would
-    vanish silently. The null count rides the aggregate that counts
-    the nodes, so the check costs no Spark action."""
+def _nodes(e: DataFrame) -> DataFrame:
+    """The node set of ``e``, in a ``node`` column."""
     ends = e.select(F.col("src").alias("node"))
-    ends = ends.unionByName(e.select(F.col("dst").alias("node")))
-    nodes = loop_round(ends.distinct(), checkpoint_dir=checkpoint_dir)
-    counts = nodes.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("node").isNull()).alias("nulls"),
-    ).collect()[0]
-    if counts.nulls:
-        e.unpersist(blocking=False)
-        raise ValueError("PageRank requires non-null edge endpoints; found a null")
-    return nodes, counts.n
+    return ends.unionByName(e.select(F.col("dst").alias("node"))).distinct()
 
 
 def _damped_rounds(
     e: DataFrame,
     nodes: DataFrame,
-    n: int,
     damping: float,
     iters: int,
     checkpoint_dir: str | None,
     seeds: DataFrame | None = None,
     n_seeds: int = 0,
-) -> tuple[DataFrame, float]:
+) -> Fixpoint:
     """``iters`` damped rounds over ``e`` and its node set; unpersists
     ``e``. A ``w`` column in ``e`` makes the loop weighted, ``seeds``
-    (``n_seeds`` graph nodes in a ``node`` column) personalized.
-    Returns (state: node, degree column[, sv], pr; delta_max)."""
+    (``n_seeds`` graph nodes in a ``node`` column) personalized. The
+    state is (node, degree column[, sv], pr, pr_prev); each round's
+    certificate holds ``n_nodes``, ``null_nodes``, the dangling mass
+    ``dangling_mass`` the next round re-teleports, and ``delta_max``
+    (NaN on round 0). Raises ``ValueError`` on a null endpoint: rank
+    sent to a null ``dst`` never joins back to a node, so mass would
+    vanish silently."""
     weighted = "w" in e.columns
     deg_col = "wdeg" if weighted else "deg"
     out_degree = F.sum("w") if weighted else F.count(F.lit(1))
@@ -112,22 +108,22 @@ def _damped_rounds(
         init_cols.append(sv.alias("sv"))
         pr_0 = F.col("sv")
         teleport = teleport * pr_0
-    init = init.select("node", *init_cols).withColumn("pr", pr_0)
-    state = loop_round(init, prev=nodes, checkpoint_dir=checkpoint_dir)
-    carried = state.columns[1:-1]  # the degree column[, sv]
-    bcast_share = n <= 2_000_000
-    delta_max = float("nan")
-    # state_cp is the round's CHECKPOINTED relation (the thing whose
-    # blocks loop_round can free once the next round materializes);
-    # state is at most a projection over it
-    state_cp = state
-    # the dangling mass m: one tiny aggregate over the checkpointed init
-    # for m_0, then a column of each round's certificate collect
+    init = init.select("node", *init_cols).withColumns(
+        {"pr": pr_0, "pr_prev": F.lit(None).cast("double")}
+    )
+    carried = init.columns[1:-2]  # the degree column[, sv]
     mass = F.sum(F.when(F.col(deg_col) == 0, F.col("pr")))
-    mass = F.coalesce(mass, F.lit(0.0)).alias("m")
-    m = float(state.agg(mass).collect()[0].m)
-    delta = F.max(F.abs(F.col("pr") - F.col("pr_prev"))).alias("d")
-    for _ in range(iters):
+    delta = F.max(F.abs(F.col("pr") - F.col("pr_prev")))
+    certificate = [
+        F.count(F.lit(1)).alias("n_nodes"),
+        F.count_if(F.col("node").isNull()).alias("null_nodes"),
+        F.coalesce(mass, F.lit(0.0)).alias("dangling_mass"),
+        F.coalesce(delta, F.lit(float("nan"))).alias("delta_max"),
+    ]
+
+    def step(state: DataFrame, cert: dict) -> DataFrame:
+        if cert["null_nodes"]:
+            raise ValueError("PageRank requires non-null edge endpoints; found a null")
         # degree > 0 before the division: ANSI mode makes /0 an error,
         # and dangling nodes contribute via the teleport term, not
         # the edge join
@@ -135,34 +131,49 @@ def _damped_rounds(
             F.col("node").alias("src"),
             (F.col("pr") / F.col(deg_col)).alias("share"),
         )
+        if cert["n_nodes"] <= BROADCAST_CAP:
+            share = F.broadcast(share)
         flow = F.col("share") * F.col("w") if weighted else F.col("share")
-        contrib = (
-            e.join(F.broadcast(share) if bcast_share else share, "src")
-            .groupBy("dst")
-            .agg(F.sum(flow).alias("inflow"))
-        )
-        # m / n stays a division: m · (1/n) would move ranks by an ulp
+        contrib = e.join(share, "src").groupBy("dst").agg(F.sum(flow).alias("inflow"))
+        contrib = contrib.hint("merge")  # see operators/iterative.py, rule 1
+        m = cert["dangling_mass"]
         if seeds is None:
-            dangling = F.lit(m) / F.lit(float(n))
+            # m / n stays a division (m · (1/n) would move ranks by an
+            # ulp); an empty graph has m = 0 and no node to share it
+            dangling = F.lit(m / max(cert["n_nodes"], 1))
         else:
             dangling = F.lit(m) * F.col("sv")
         inflow = F.coalesce("inflow", F.lit(0.0))
-        new = state.join(contrib, state.node == contrib.dst, "left").select(
+        return state.join(contrib, state.node == contrib.dst, "left").select(
             "node",
             *carried,
             (teleport + F.lit(damping) * (inflow + dangling)).alias("pr"),
             F.col("pr").alias("pr_prev"),
         )
-        new = loop_round(new, prev=state_cp, checkpoint_dir=checkpoint_dir)
-        cert = new.agg(delta, mass).collect()[0]
-        delta_max = float(cert.d)
-        m = float(cert.m)
-        state_cp = new
-        state = new.drop("pr_prev")
-    # state is a projection over the checkpointed final round; the
-    # edge cache is dead weight now
-    e.unpersist(blocking=False)
-    return state, delta_max
+
+    try:
+        return fixpoint(init, step, certificate, iters, checkpoint_dir=checkpoint_dir)
+    finally:
+        # the result is a checkpoint; the edge cache is dead weight now
+        e.unpersist(blocking=False)
+
+
+def _check_params(damping: float, iters: int) -> None:
+    if not 0.0 < damping < 1.0:
+        raise ValueError(f"damping must be in (0, 1): {damping}")
+    if iters < 1:
+        raise ValueError(f"iters must be >= 1: {iters}")
+
+
+def _result(fp: Fixpoint, *carried: str) -> dict:
+    """A variant's result: ranks (node, ``carried``, pr), the node
+    count, the final round's ``delta_max`` and the per-round trace."""
+    return {
+        "ranks": fp.state.select("node", *carried, "pr"),
+        "n_nodes": fp.trace[0]["n_nodes"],
+        "delta_max": fp.trace[-1]["delta_max"],
+        "trace": fp.trace,
+    }
 
 
 def pagerank(
@@ -178,21 +189,18 @@ def pagerank(
     pr_0 = 1, uniform teleport, dangling share m / n.
 
     Returns ``{"ranks": DataFrame(node, pr), "n_nodes": int,
-    "delta_max": float}`` — ``delta_max`` is the largest per-node
-    change of the final iteration, the convergence certificate a
-    caller turns into a loud check (QA queries pin it as a boolean).
+    "delta_max": float, "trace": list[dict]}`` — ``delta_max`` is the
+    largest per-node change of the final iteration, the convergence
+    certificate a caller turns into a loud check (QA queries pin it as
+    a boolean; NaN on an empty graph). ``trace[r]`` is round r's
+    observed certificate: ``n_nodes``, ``null_nodes``,
+    ``dangling_mass`` and ``delta_max`` (NaN on round 0).
     Self-loops and duplicate edges are the caller's policy; this
     operator takes the edge relation as given.
     """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1): {damping}")
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1: {iters}")
+    _check_params(damping, iters)
     e = _dst_partitioned(edges, src, dst)
-    nodes, n = _node_set(e, checkpoint_dir)
-    state, delta_max = _damped_rounds(e, nodes, n, damping, iters, checkpoint_dir)
-    ranks = state.select("node", "pr")
-    return {"ranks": ranks, "n_nodes": n, "delta_max": delta_max}
+    return _result(_damped_rounds(e, _nodes(e), damping, iters, checkpoint_dir))
 
 
 def personalized_pagerank(
@@ -218,14 +226,11 @@ def personalized_pagerank(
     double-summation-order allowance), no invariant certificates needed.
 
     Returns ``{"ranks": DataFrame(node, sv, pr), "n_nodes", "n_seeds",
-    "delta_max"}``.
+    "delta_max", "trace"}`` (see :func:`pagerank`).
     """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1): {damping}")
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1: {iters}")
+    _check_params(damping, iters)
     e = _dst_partitioned(edges, src, dst)
-    nodes, n = _node_set(e, checkpoint_dir)
+    nodes = _nodes(e)
     # Normalize the seed set before it defines the teleport measure:
     # duplicates in ``seeds`` would duplicate node rows through the
     # loop's left join, and a seed absent from the graph would
@@ -237,11 +242,8 @@ def personalized_pagerank(
     if n_seeds < 1:
         e.unpersist(blocking=False)
         raise ValueError("seeds must be non-empty and present in the graph")
-    state, delta_max = _damped_rounds(
-        e, nodes, n, damping, iters, checkpoint_dir, seed_set, n_seeds
-    )
-    ranks = state.select("node", "sv", "pr")
-    return {"ranks": ranks, "n_nodes": n, "n_seeds": n_seeds, "delta_max": delta_max}
+    fp = _damped_rounds(e, nodes, damping, iters, checkpoint_dir, seed_set, n_seeds)
+    return {**_result(fp, "sv"), "n_seeds": n_seeds}
 
 
 def weighted_pagerank(
@@ -261,12 +263,9 @@ def weighted_pagerank(
     pair co-ordered once. Otherwise :func:`pagerank`'s update, so it
     reduces exactly to it when all weights are 1 (pinned by test).
     Returns ``{"ranks": DataFrame(node, wdeg, pr), "n_nodes",
-    "delta_max"}``.
+    "delta_max", "trace"}`` (see :func:`pagerank`).
     """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1): {damping}")
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1: {iters}")
+    _check_params(damping, iters)
     e = _dst_partitioned(edges, src, dst, weight)
     # Weight-sign guard: w <= 0 silently corrupts the measure — a node
     # whose out-weights sum to 0 despite having edges is misclassified
@@ -274,8 +273,8 @@ def weighted_pagerank(
     # counts as dangling, LEAKING rank mass with no error. NaN is
     # neither null nor <= 0 in SQL comparisons yet poisons every
     # downstream wdeg sum, so it gets its own predicate. One limit(1)
-    # probe on the persisted edge relation, run before the node set
-    # (measured: after it, the probe costs one Spark job more).
+    # probe on the persisted edge relation: it must refuse before any
+    # round runs, so it cannot ride round 0's certificate.
     bad = F.col("w").isNull() | F.isnan("w") | (F.col("w") <= 0)
     if e.filter(bad).limit(1).count() > 0:
         e.unpersist(blocking=False)
@@ -283,7 +282,4 @@ def weighted_pagerank(
             "weighted_pagerank requires strictly positive edge "
             f"weights; found {weight} null, NaN, or <= 0"
         )
-    nodes, n = _node_set(e, checkpoint_dir)
-    state, delta_max = _damped_rounds(e, nodes, n, damping, iters, checkpoint_dir)
-    ranks = state.select("node", "wdeg", "pr")
-    return {"ranks": ranks, "n_nodes": n, "delta_max": delta_max}
+    return _result(_damped_rounds(e, _nodes(e), damping, iters, checkpoint_dir), "wdeg")

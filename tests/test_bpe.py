@@ -26,6 +26,23 @@ def test_bpe_classic_example(spark):
     assert {m["merged"] for m in got} >= {"est", "low", "newest"}
 
 
+def test_train_bpe_frees_each_merge_step(spark):
+    """Each merge step's vocabulary goes through loop_round, so the
+    step it supersedes leaves executor storage at once, and the last
+    one is freed on return: training leaves no checkpointed RDD behind
+    (in the style of test_loop_round_frees_previous_round)."""
+
+    def stored_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    texts = ["low low low lower lower newest newest widest widest"]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    before = stored_ids()
+    got = train_bpe(df, "text", 6)
+    assert got == train_bpe_reference(texts, 6) and len(got) == 6
+    assert stored_ids() - before == set()
+
+
 def test_bpe_overlapping_pairs(spark):
     """aaa -> [aa, a]: non-overlapping left-to-right greedy merging."""
     texts = ["aaa aaa aaaa b"]

@@ -400,9 +400,10 @@ def _reference_pagerank(variant, d=0.85, iters=12):
 
 @pytest.mark.parametrize("variant", ["pagerank", "personalized", "weighted"])
 def test_pagerank_matches_reference_iteration(spark, variant):
-    """12 rounds of each variant equal the pure-Python iteration: uniform
-    teleport, seed teleport (sv) and weighted shares, each over a graph
-    with a dangling node."""
+    """12 rounds, and a single round, of each variant equal the
+    pure-Python iteration: uniform teleport, seed teleport (sv) and
+    weighted shares, each over a graph with a dangling node. The trace
+    holds round 0 and one certificate per round."""
     from lakehouse_architecture_spark.operators.pagerank import (
         pagerank,
         personalized_pagerank,
@@ -411,24 +412,27 @@ def test_pagerank_matches_reference_iteration(spark, variant):
 
     rows = [e + (w,) for e, w in zip(_PR_EDGES, _PR_WEIGHTS)]
     df = spark.createDataFrame(rows, "src long, dst long, w double")
-    if variant == "pagerank":
-        r = pagerank(df.drop("w"), iters=12)
-    elif variant == "personalized":
-        seeds = spark.createDataFrame([(v,) for v in _PR_SEEDS], "node long")
-        r = personalized_pagerank(df.drop("w"), seeds, iters=12)
-        assert r["n_seeds"] == len(_PR_SEEDS)
-    else:
-        r = weighted_pagerank(df, iters=12)
-    got = {row.node: row.pr for row in r["ranks"].collect()}
-    want = _reference_pagerank(variant)
+    for iters in (1, 12):
+        if variant == "pagerank":
+            r = pagerank(df.drop("w"), iters=iters)
+        elif variant == "personalized":
+            seeds = spark.createDataFrame([(v,) for v in _PR_SEEDS], "node long")
+            r = personalized_pagerank(df.drop("w"), seeds, iters=iters)
+            assert r["n_seeds"] == len(_PR_SEEDS)
+        else:
+            r = weighted_pagerank(df, iters=iters)
+        got = {row.node: row.pr for row in r["ranks"].collect()}
+        want = _reference_pagerank(variant, iters=iters)
 
-    assert r["n_nodes"] == len(want)
-    assert set(got) == set(want)
-    assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
-    # total mass conserved: n under the uniform teleport, 1 when seeded
-    mass = 1.0 if variant == "personalized" else len(want)
-    assert abs(sum(got.values()) - mass) < 1e-9
-    # the hub out-ranks the dangling leaf
+        assert r["n_nodes"] == len(want)
+        assert set(got) == set(want)
+        assert all(abs(got[v] - want[v]) < 1e-9 for v in want)
+        # total mass conserved: n under the uniform teleport, 1 when seeded
+        mass = 1.0 if variant == "personalized" else len(want)
+        assert abs(sum(got.values()) - mass) < 1e-9
+        assert len(r["trace"]) == iters + 1
+        assert r["delta_max"] == r["trace"][-1]["delta_max"] > 0
+    # after 12 rounds the hub out-ranks the dangling leaf
     assert got[1] > got[4]
 
 
@@ -687,7 +691,9 @@ def test_iterative_reliable_checkpoint_identical(spark, tmp_path):
     """The cluster-safe reliable-checkpoint path (checkpoint_dir set:
     rounds write files instead of unreplicated executor blocks) must
     produce IDENTICAL results to local mode — peel cores, core
-    numbers, and ranks are all pinned here."""
+    numbers, and ranks are all pinned here, and so is each round's
+    certificate: an observation is reported once on either kind of
+    checkpoint."""
     from lakehouse_architecture_spark.operators.kcore import (
         core_numbers,
         kcore_peel,
@@ -708,9 +714,10 @@ def test_iterative_reliable_checkpoint_identical(spark, tmp_path):
     assert sorted(map(tuple, local["edges"].collect())) == sorted(
         map(tuple, rel["edges"].collect())
     )
-    assert (local["rounds"], local["converged"]) == (
+    assert (local["rounds"], local["converged"], local["trace"]) == (
         rel["rounds"],
         rel["converged"],
+        rel["trace"],
     )
 
     cn_local = core_numbers(edges)
@@ -718,6 +725,7 @@ def test_iterative_reliable_checkpoint_identical(spark, tmp_path):
     assert sorted(map(tuple, cn_local["cores"].collect())) == sorted(
         map(tuple, cn_rel["cores"].collect())
     )
+    assert cn_local["trace"] == cn_rel["trace"]
 
     both = edges.unionAll(edges.selectExpr("dst AS src", "src AS dst"))
     pr_local = pagerank(both, iters=3)
@@ -731,6 +739,10 @@ def test_iterative_reliable_checkpoint_identical(spark, tmp_path):
     assert set(got_l) == set(got_r)
     for node, pr in got_l.items():
         assert abs(pr - got_r[node]) < 1e-12, (node, pr, got_r[node])
+    assert len(pr_local["trace"]) == len(pr_rel["trace"]) == 4
+    for cert_l, cert_r in zip(pr_local["trace"], pr_rel["trace"]):
+        assert cert_l.keys() == cert_r.keys()
+        assert cert_l == pytest.approx(cert_r, abs=1e-12, nan_ok=True)
 
     from lakehouse_architecture_spark.operators.components import (
         connected_components,
@@ -763,10 +775,10 @@ def test_loop_round_frees_previous_round(spark):
         }
 
     base = spark.range(1000).withColumn("x", F.col("id") * 2)
-    r1 = loop_round(base)
+    r1, _ = loop_round(base)
     id1 = r1._jdf.queryExecution().analyzed().rdd().id()
     assert id1 in stored_ids()
-    r2 = loop_round(r1.withColumn("y", F.col("x") + 1), prev=r1)
+    r2, _ = loop_round(r1.withColumn("y", F.col("x") + 1), prev=r1)
     assert id1 not in stored_ids()
     assert r2.count() == 1000 and r2.filter(F.col("y") != F.col("x") + 1).count() == 0
 
