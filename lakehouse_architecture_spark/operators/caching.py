@@ -47,8 +47,9 @@ from __future__ import annotations
 
 import os
 import threading
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _LOCK = threading.Lock()
 _SLOTS: dict[str, tuple[object, DataFrame]] = {}
@@ -104,7 +105,9 @@ def _normalize_key(key: object) -> object:
 
 
 def one_slot_persist(
-    df: DataFrame, slot: str = "default", key: object = None
+    df: DataFrame | Callable[[], DataFrame],
+    slot: str = "default",
+    key: object = None,
 ) -> DataFrame:
     """Persist ``df`` into ``slot``, releasing whatever it held before.
 
@@ -114,9 +117,15 @@ def one_slot_persist(
     unmaterialized. ``key=None`` claims no identity and never matches.
     Path-like key elements are abspath-resolved here, at registration
     (see :func:`_normalize_key`).
+
+    ``df`` may also be a no-argument builder, called only on a miss: a
+    warm hit then builds no plan at all (a plan build is hundreds of
+    Py4J round trips for an array-heavy relation). A builder's warm hit
+    is checked against the thread's active session.
     """
     if key is not None:
         key = _normalize_key(key)
+    built = isinstance(df, DataFrame)
     with _LOCK:
         held = _SLOTS.get(slot)
         if (
@@ -126,7 +135,8 @@ def one_slot_persist(
             # a warm hit must come from the SAME live session — a new
             # session's plan must not be answered with a stopped
             # session's DataFrame (tests create/stop many sessions)
-            and held[1].sparkSession is df.sparkSession
+            and held[1].sparkSession
+            is (df.sparkSession if built else SparkSession.getActiveSession())
             # ...and must STILL be cached: Spark's CacheManager is
             # plan-keyed, so two slots holding the same logical plan
             # share one entry and releasing either kills both — a
@@ -134,7 +144,10 @@ def one_slot_persist(
             and _is_persisted(held[1])
         ):
             return held[1]
-        _SLOTS.pop(slot, None)
+    if not built:
+        df = df()  # outside the lock: a builder may fill other slots
+    with _LOCK:
+        held = _SLOTS.pop(slot, None)
         if held is not None:
             try:
                 held[1].unpersist(blocking=False)

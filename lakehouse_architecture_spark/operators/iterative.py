@@ -78,13 +78,18 @@ def _free_local_checkpoint(df: DataFrame) -> None:
     cannot be recomputed) — callers free only what they will never read
     again. Spark frees the blocks by itself only once the JVM collects
     the checkpointed RDD, which an old-generation GC can put off for
-    many rounds or batches."""
+    many rounds or batches.
+
+    Frees through ``SparkContext.unpersistRDD``, the call ``RDD.unpersist``
+    makes after logging a WARN for every locally checkpointed RDD it is
+    given — one per freed round, which buried real warnings."""
     try:
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         for i in range(leaves.length()):
             leaf = leaves.apply(i)
             if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
+                rdd = leaf.rdd()
+                rdd.sparkContext().unpersistRDD(rdd.id(), False)
     except Exception:
         pass  # freeing is an optimization; never fail the caller
 

@@ -18,8 +18,17 @@ primitives so it runs at any scale and is reproducible across engines:
   (``sig_lo * 2^28 + sig_hi`` < 2^56) — a collision-free integer band
   key, no hashing; docs sharing any band key are candidates (one
   shuffle on band key);
-- verification: exact Jaccard on the candidate pairs only (shingle
-  semi-join), never all-pairs.
+- verification: exact Jaccard on the candidate pairs only, from the
+  per-doc gram arrays (``size(array_intersect)``), never all-pairs.
+  Both verify stages, LSH's :func:`jaccard_verify_arrays` and the
+  prefix filter's, choose their join with one dispatch
+  (:func:`_verify_join_hint`): the per-doc array relation is broadcast
+  when two independent metadata size estimates sit under
+  ``_VERIFY_BROADCAST_BYTES``, and shuffle-hash joined otherwise.
+
+The signature and band projections are SQL text, one ``selectExpr``
+each: a Python-lambda ``F.transform`` costs ~64 Py4J round trips to
+plan, the same expression as text ~3.
 
 Scale: the only all-to-all structure is the groupBy on band keys;
 candidate verification joins exploded shingles for candidate docs only.
@@ -36,7 +45,10 @@ from pyspark.sql import functions as F
 
 from lakehouse_architecture_spark.operators.caching import one_slot_persist
 from lakehouse_architecture_spark.operators.dedup import normalize_text
-from lakehouse_architecture_spark.operators.partitioning import spread_scan
+from lakehouse_architecture_spark.operators.partitioning import (
+    scan_size_bytes,
+    spread_scan,
+)
 
 DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2  # r; bands b = num_hashes / r
@@ -58,19 +70,16 @@ _SLICE_BITS = 28
 _VERIFY_BROADCAST_BYTES = 128 * 1024 * 1024
 
 
-def _seed_hex(i: int):
-    """The md5 digest column for signature ``i``'s seed group, applied
-    to a shingle string column."""
-    prefix = F.lit(f"{i // _SLICES_PER_SEED}:")
-    return lambda s: F.md5(F.concat(prefix, s))
+def _seed_hex(s: int, shingle: str) -> str:
+    """SQL text: seed group ``s``'s md5 digest of a shingle expression."""
+    return f"md5(concat('{s}:', {shingle}))"
 
 
-def _slice_long(hex_col, i: int):
-    """Signature ``i``'s 28-bit integer slice of its seed digest."""
+def _slice_long(hex_expr: str, i: int) -> str:
+    """SQL text: signature ``i``'s 28-bit integer slice of its seed
+    group's digest."""
     pos = _SLICE_HEX_WIDTH * (i % _SLICES_PER_SEED) + 1
-    return F.conv(
-        F.substring(hex_col, pos, _SLICE_HEX_WIDTH), 16, 10
-    ).cast("long")
+    return f"CAST(conv(substring({hex_expr}, {pos}, {_SLICE_HEX_WIDTH}), 16, 10) AS BIGINT)"
 
 
 def gram_arrays(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
@@ -95,7 +104,7 @@ def gram_arrays(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFr
     scan already has many files, so :func:`spread_scan` skips the
     repartition (a full shuffle of the corpus) there.
     """
-    base = spread_scan(df).select(
+    base = spread_scan(df, skip_small=False).select(
         F.col(id_col).alias("doc"),
         F.split(normalize_text(F.col(text_col)), " ").alias("toks"),
     )
@@ -155,17 +164,11 @@ def minhash_signatures(
     than once and md5 is not a cheap expression.
     """
     n_seeds = (num_hashes + _SLICES_PER_SEED - 1) // _SLICES_PER_SEED
-    pre = sh.select(
-        "doc",
-        *[
-            _seed_hex(s * _SLICES_PER_SEED)(F.col("shingle")).alias(f"hx_{s}")
-            for s in range(n_seeds)
-        ],
+    pre = sh.selectExpr(
+        "doc", *[f"{_seed_hex(s, 'shingle')} AS hx_{s}" for s in range(n_seeds)]
     )
     aggs = [
-        F.min(
-            _slice_long(F.col(f"hx_{i // _SLICES_PER_SEED}"), i)
-        ).alias(f"sig_{i}")
+        F.expr(f"min({_slice_long(f'hx_{i // _SLICES_PER_SEED}', i)})").alias(f"sig_{i}")
         for i in range(num_hashes)
     ]
     return pre.groupBy("doc").agg(*aggs)
@@ -190,24 +193,18 @@ def minhash_signatures_from_grams(
     is referenced by four non-cheap consumers.
     """
     n_seeds = (num_hashes + _SLICES_PER_SEED - 1) // _SLICES_PER_SEED
-
-    def seed_digests(s: int):
-        # Single-parameter lambda closing over the seed literal: a
-        # two-parameter lambda would make transform() bind the second
-        # arg to the ELEMENT INDEX, silently replacing the seed.
-        hx = _seed_hex(s * _SLICES_PER_SEED)
-        return F.transform("grams", lambda g_: hx(g_)).alias(f"hx_{s}")
-
-    base = g.select("doc", *[seed_digests(s) for s in range(n_seeds)])
-
-    def sig(i: int):
-        return F.array_min(
-            F.transform(
-                f"hx_{i // _SLICES_PER_SEED}", lambda h: _slice_long(h, i)
-            )
-        ).alias(f"sig_{i}")
-
-    return base.select("doc", *[sig(i) for i in range(num_hashes)])
+    base = g.selectExpr(
+        "doc",
+        *[f"transform(grams, x -> {_seed_hex(s, 'x')}) AS hx_{s}" for s in range(n_seeds)],
+    )
+    return base.selectExpr(
+        "doc",
+        *[
+            f"array_min(transform(hx_{i // _SLICES_PER_SEED}, h -> {_slice_long('h', i)}))"
+            f" AS sig_{i}"
+            for i in range(num_hashes)
+        ],
+    )
 
 
 def lsh_band_keys(
@@ -221,24 +218,24 @@ def lsh_band_keys(
     long (``sig_lo * 2^28 + sig_hi``) — a COLLISION-FREE integer band
     key, cheaper than hashing and trivially replicated in any SQL
     engine. Wider bands fall back to an md5 over the stringified
-    signatures (the packed form would overflow a signed long).
+    signatures (the packed form would overflow a signed long). One
+    ``stack`` generator over SQL text emits the doc's bands.
     """
     assert num_hashes % band_size == 0
     bands = []
     for b in range(num_hashes // band_size):
-        cols = [F.col(f"sig_{b * band_size + j}") for j in range(band_size)]
+        cols = [f"sig_{b * band_size + j}" for j in range(band_size)]
         if band_size == 1:
             key = cols[0]
         elif band_size == 2:
-            key = cols[0] * F.lit(1 << _SLICE_BITS) + cols[1]
+            key = f"{cols[0]} * {1 << _SLICE_BITS} + {cols[1]}"
         else:
-            key = F.md5(F.concat_ws("|", *[c.cast("string") for c in cols]))
-        bands.append(
-            F.struct(F.lit(b).alias("band"), key.alias("band_key"))
-        )
-    return (
-        sigs.select("doc", F.explode(F.array(*bands)).alias("bk"))
-        .select("doc", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+            key = "md5(concat_ws('|', {}))".format(
+                ", ".join(f"CAST({c} AS STRING)" for c in cols)
+            )
+        bands.append(f"{b}, {key}")
+    return sigs.selectExpr(
+        "doc", f"stack({len(bands)}, {', '.join(bands)}) AS (band, band_key)"
     )
 
 
@@ -330,33 +327,56 @@ def capped_gram_arrays(g: DataFrame, max_doc_freq: int) -> DataFrame:
     return apply_stop_list(g, stop_shingle_list(g, max_doc_freq))
 
 
-def jaccard_verify_arrays(pairs: DataFrame, g: DataFrame) -> DataFrame:
+def _verify_join_hint(*estimates: DataFrame) -> str:
+    """The join hint for a verify stage's per-doc array side: broadcast
+    when every one of the given INDEPENDENT size estimates is known and
+    under ``_VERIFY_BROADCAST_BYTES``, else ``shuffle_hash``.
+
+    Metadata only (:func:`~.partitioning.scan_size_bytes`, no Spark job).
+    Two estimates must agree because size-only stat propagation through
+    explode/aggregate nodes with array columns is unreliable and a
+    forced broadcast hint bypasses ``autoBroadcastJoinThreshold``; an
+    unknown or oversized estimate keeps the scale-safe shuffle_hash,
+    never "assume small". The quadratic candidate-pair side is never
+    the build side either way: only the per-doc array relation, bounded
+    by the corpus token volume, is hinted."""
+    sizes = [scan_size_bytes(r) for r in estimates]
+    small = all(b is not None and b < _VERIFY_BROADCAST_BYTES for b in sizes)
+    return "broadcast" if small else "shuffle_hash"
+
+
+def jaccard_verify_arrays(
+    pairs: DataFrame, g: DataFrame, source: DataFrame | None = None
+) -> DataFrame:
     """Exact Jaccard for candidate pairs, computed from per-doc gram
     ARRAYS: two joins attach each side's (distinct) shingle array, then
     ``size(array_intersect)`` scores the pair map-side.
 
-    Versus the exploded formulation (:func:`jaccard_verify`: 4 joins +
-    2 groupBys over the shingle relation) this is 2 joins and zero
-    aggregation. Pairs where either side's capped array is empty
-    score 0 (or null when both are empty), matching the exploded
-    formulation's inner-join drop under any threshold > 0.
+    Versus an exploded formulation (4 joins + 2 groupBys over the
+    shingle relation) this is 2 joins and zero aggregation. Pairs where
+    either side's capped array is empty score 0 (or null when both are
+    empty), as an exploded inner join would drop them under any
+    threshold > 0.
 
-    Join strategy: the GRAM side carries a shuffle-hash hint so the
-    statically-unsized candidate relation can never be picked as a
-    broadcast build — Catalyst's estimate for generate/aggregate output
-    is a wild underestimate, and on a dup-heavy corpus the "small"
-    pair side is actually quadratic (measured: a 19M-pair broadcast
-    build OOMed a 100k-doc run in the sibling simhash pipeline). The
-    gram side's per-partition build is bounded by corpus/partitions;
-    when the pair side truly is small, AQE still converts the exchange
-    to a broadcast at runtime from REAL sizes.
+    Join strategy: the prefix-filter verify's dispatch
+    (:func:`_verify_join_hint`) over two independent size estimates —
+    ``g``'s own and that of ``source``, the relation ``g`` was derived
+    from (``g`` itself when not given). Under the cap ``g`` is the
+    broadcast build side of both the ``doc_a`` and the ``doc_b`` join,
+    so no join exchanges the candidate pairs (adaptive execution plans
+    one broadcast stage per join: it does not reuse a broadcast over a
+    cached relation). Over the cap or at an unknown size the GRAM side carries a
+    shuffle-hash hint, so the statically-unsized candidate relation can
+    never be picked as a broadcast build — Catalyst's estimate for
+    generate/aggregate output is a wild underestimate, and on a
+    dup-heavy corpus the "small" pair side is actually quadratic
+    (measured: a 19M-pair broadcast build OOMed a 100k-doc run in the
+    sibling simhash pipeline). The gram side's per-partition build is
+    then bounded by corpus/partitions.
     """
-    ga = g.select(F.col("doc").alias("doc_a"), F.col("grams").alias("ga")).hint(
-        "shuffle_hash"
-    )
-    gb = g.select(F.col("doc").alias("doc_b"), F.col("grams").alias("gb")).hint(
-        "shuffle_hash"
-    )
+    hint = _verify_join_hint(g, g if source is None else source)
+    ga = g.select(F.col("doc").alias("doc_a"), F.col("grams").alias("ga")).hint(hint)
+    gb = g.select(F.col("doc").alias("doc_b"), F.col("grams").alias("gb")).hint(hint)
     n_common = F.size(F.array_intersect("ga", "gb"))
     denom = F.size("ga") + F.size("gb") - n_common
     return (
@@ -366,46 +386,6 @@ def jaccard_verify_arrays(pairs: DataFrame, g: DataFrame) -> DataFrame:
             "doc_a",
             "doc_b",
             (n_common.cast("double") / F.when(denom > 0, denom)).alias("jaccard"),
-        )
-    )
-
-
-def jaccard_verify(
-    pairs: DataFrame, sh: DataFrame, max_doc_freq: int | None = None
-) -> DataFrame:
-    """Exact Jaccard for candidate pairs from the shingle sets.
-
-    With ``max_doc_freq`` set, stop-shingles above the cap are excluded
-    from both the intersection and the set sizes (consistent capped
-    Jaccard; see :func:`df_capped_shingles`). NOTE: ``sh`` fans out to
-    three consumers here — callers applying a cap themselves should pass
-    an already-capped, CACHED relation instead (as
-    :func:`minhash_lsh_dedupe` does) so the cap join isn't recomputed
-    per consumer.
-    """
-    if max_doc_freq is not None:
-        sh = df_capped_shingles(sh, max_doc_freq)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    sa = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    sb = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    inter = (
-        pairs.join(sa, "doc_a")
-        .join(sb, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    return (
-        pairs.join(inter, ["doc_a", "doc_b"], "left_outer")
-        .na.fill({"n_common": 0})
-        .join(sizes.withColumnsRenamed({"doc": "doc_a", "n_shingles": "n_a"}), "doc_a")
-        .join(sizes.withColumnsRenamed({"doc": "doc_b", "n_shingles": "n_b"}), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (
-                F.col("n_common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-            ).alias("jaccard"),
         )
     )
 
@@ -521,9 +501,12 @@ def minhash_lsh_dedupe(
     slot_key = (
         None if cache_key is None else (cache_key, shingle_n, max_doc_freq)
     )
-    g = gram_arrays(df, text_col, id_col, shingle_n)
-    if persist_intermediate:
-        g = one_slot_persist(g, slot="minhash-lsh-grams", key=slot_key)
+
+    def kept(build, slot):
+        # a warm keyed slot builds nothing: the builder runs on a miss only
+        return one_slot_persist(build, slot=slot, key=slot_key) if persist_intermediate else build()
+
+    g = kept(lambda: gram_arrays(df, text_col, id_col, shingle_n), "minhash-lsh-grams")
     sigs = minhash_signatures_from_grams(g, num_hashes)
     bands = lsh_band_keys(sigs, num_hashes, band_size)
     pairs = candidate_pairs(bands)
@@ -532,13 +515,9 @@ def minhash_lsh_dedupe(
     if max_doc_freq is None:
         gv = g
     else:
-        gv = capped_gram_arrays(g, max_doc_freq)
-        if persist_intermediate:
-            gv = one_slot_persist(
-                gv, slot="minhash-lsh-grams-capped", key=slot_key
-            )
+        gv = kept(lambda: capped_gram_arrays(g, max_doc_freq), "minhash-lsh-grams-capped")
     return (
-        jaccard_verify_arrays(pairs, gv)
+        jaccard_verify_arrays(pairs, gv, source=g)
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
     )
@@ -969,38 +948,13 @@ def prefix_filter_jaccard_pairs(
         .select("doc_a", "doc_b")
     )
     # Verify-side join strategy (r16, guide §3.1): the per-doc ordered-
-    # array relation is BOUNDED by corpus token volume — when the
-    # SOURCE relation's metadata-only size estimate sits under the cap,
-    # broadcasting it replaces two shuffles of the full og arrays
-    # (measured 2x on the verify stage at sf0.1). The cap keeps the r13
-    # lesson intact: the statically-unsized QUADRATIC candidate
-    # relation must never be a broadcast build side, and an
-    # over-cap/unknown-size corpus keeps the pinned shuffle_hash (the
-    # at-scale shape; None → shuffle_hash, never "assume small").
-    from lakehouse_architecture_spark.operators.partitioning import (
-        scan_size_bytes,
-    )
-
-    # Two INDEPENDENT estimates must agree the relation is small (r16
-    # ADVICE: size-only stat propagation through explode/aggregate
-    # nodes with array columns is unreliable, and the forced broadcast
-    # hint bypasses autoBroadcastJoinThreshold): the SOURCE relation's
-    # stats AND the ordered-array relation's own propagated stats both
-    # have to sit under the cap — either unknown or oversized falls
-    # back to the pinned shuffle_hash, the at-scale shape. Measured at
-    # sf0.1 the two estimates track each other (4.6 MB gv / 5.7 MB ov).
-    gv_bytes = scan_size_bytes(gv)
-    ov_bytes = scan_size_bytes(ov)
-    verify_hint = (
-        "broadcast"
-        if (
-            gv_bytes is not None
-            and gv_bytes < _VERIFY_BROADCAST_BYTES
-            and ov_bytes is not None
-            and ov_bytes < _VERIFY_BROADCAST_BYTES
-        )
-        else "shuffle_hash"
-    )
+    # array relation is BOUNDED by corpus token volume — when both the
+    # SOURCE relation's and the ordered-array relation's own metadata-
+    # only estimates sit under the cap, broadcasting it replaces two
+    # shuffles of the full og arrays (measured 2x on the verify stage at
+    # sf0.1; the two estimates tracked each other there, 4.6 MB gv /
+    # 5.7 MB ov). Over the cap or unknown: the pinned shuffle_hash.
+    verify_hint = _verify_join_hint(gv, ov)
     ga = ov.select(F.col("doc").alias("doc_a"), F.col("og").alias("ga")).hint(
         verify_hint
     )

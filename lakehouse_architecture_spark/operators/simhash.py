@@ -50,7 +50,7 @@ def simhash_fingerprints(
     that array — the same (token × bit) work the exploded formulation
     does, minus its two aggregation exchanges.
     """
-    toks = spread_scan(df).select(
+    toks = spread_scan(df, skip_small=False).select(
         F.col(id_col).alias("doc"),
         F.array_distinct(F.split(normalize_text(F.col(text_col)), " ")).alias(
             "toks"

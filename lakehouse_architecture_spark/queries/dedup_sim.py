@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from lakehouse_architecture_spark.operators.caching import one_slot_persist
 from lakehouse_architecture_spark.operators.minhash import (
     candidate_pairs,
-    jaccard_verify,
     lsh_band_keys,
     minhash_lsh_dedupe,
     minhash_signatures,

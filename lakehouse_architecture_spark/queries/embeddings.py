@@ -84,10 +84,16 @@ def emb_knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both engines rank by the UNROUNDED cosine with a vec_id tie-break
     # (the oracle's ORDER BY mirrors this), so k=10 is fetched directly
     # — no rounded-tie fetch margin needed.
-    out = knn_bruteforce_auto(emb, q, k=10)
-    return out.select(
-        "vec_id", F.round("cosine_sim", 6).alias("cosine_sim")
-    ).orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+    k = 10
+    out = knn_bruteforce_auto(emb, q, k=k)
+    # The result holds at most k rows by construction (one query id, a
+    # window kept to rn <= k), so the limit drops no row: it plans the
+    # sort as a take-ordered, with no range-sort sample job or exchange.
+    return (
+        out.select("vec_id", F.round("cosine_sim", 6).alias("cosine_sim"))
+        .orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+        .limit(k)
+    )
 
 
 @query("emb_knn_bruteforce_decimal", oracle=KNN_ORACLE)

@@ -57,6 +57,15 @@ DEFAULT_CONF: dict[str, str] = {
     # only fires past the creation-side size thresholds, i.e. exactly
     # the big-join case it exists for (no effect at test SF).
     "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    # PySpark's DataFrame origin capture: with it on, every Column and
+    # DataFrame call reads the active session and a conf, sets and clears
+    # the JVM's PySparkCurrentOrigin and tries `import IPython` — ~10 Py4J
+    # round trips per call (`F.col` costs 13, `F.lit` 3), which at a small
+    # scale factor is most of a query's plan-build time. The only loss is
+    # the Python `file:line` in DataFrame error contexts; the error itself
+    # and its JVM stack are unchanged. PySpark reads this once per
+    # process, from the first session that asks.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

@@ -11,6 +11,7 @@ instead of silently nulling them.
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -188,7 +189,6 @@ _SCHEMAS_MAX = 1024
 # The session confs Spark's parquet schema inference and partition
 # discovery read; a flipped conf is a new key.
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -196,6 +196,22 @@ _INFERENCE_CONFS = (
     "spark.sql.sources.partitionColumnTypeInference.enabled",
     "spark.sql.timestampType",
 )
+# Read into the key only for footers holding an INT64 TIMESTAMP(NANOS)
+# column, the one type whose inference it changes (BIGINT or an error):
+# events loading sets it on the live session, and keying every table on
+# it would re-infer each one read after that.
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _holds_int64_nanos(schema) -> bool:
+    """True when a parquet schema has an INT64 TIMESTAMP(NANOS) leaf."""
+    cols = (schema.column(i) for i in range(len(schema)))
+    return any(
+        c.physical_type == "INT64"
+        and c.logical_type.type == "TIMESTAMP"
+        and json.loads(c.logical_type.to_json()).get("timeUnit") == "nanoseconds"
+        for c in cols
+    )
 
 
 def _hidden(name: str) -> bool:
@@ -247,7 +263,9 @@ def _inference_key(spark: SparkSession, path: str):
         footers.add((tree, tuple(sorted((md.metadata or {}).items()))))
     if len(footers) != 1:
         return None
-    confs = tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    # one footer: the last file read holds it
+    names = _INFERENCE_CONFS + ((_NANOS_CONF,) if _holds_int64_nanos(md.schema) else ())
+    confs = tuple(spark.conf.get(k, None) for k in names)
     return footers.pop(), frozenset(d for d, _ in files), confs
 
 

@@ -23,7 +23,7 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql.types import StructField, StructType, TimestampType
+from pyspark.sql.types import LongType, StructField, StructType, TimestampType
 
 from lakehouse_architecture_spark.queries.advanced import asof_join_purchase_click
 from lakehouse_architecture_spark.queries.events import (
@@ -208,6 +208,32 @@ def test_int96_and_int64_nanos_get_their_own_schemas(spark, tmp_path):
             epoch_s = int(_BASE.replace(tzinfo=dt.timezone.utc).timestamp())
             assert ns.collect()[0].ts == epoch_s * 10**9
             assert isinstance(int96.schema["ts"].dataType, TimestampType)
+    finally:
+        if original is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, original)
+
+
+def test_nanos_conf_keys_only_footers_with_int64_nanos(spark, sf_dir, tmp_path, jobs_launched):
+    """``nanosAsLong`` changes the inference of INT64 TIMESTAMP(NANOS)
+    columns only: flipping it, as loading events does, re-infers no
+    table without one, while a file with one is never served the schema
+    inferred under the other setting (there, ``false`` is an error)."""
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    original = spark.conf.get(conf, None)
+    ns_path = str(tmp_path / "ns.parquet")
+    ts = pa.table({"ts": pa.array([_BASE]).cast(pa.timestamp("ns"))})
+    pq.write_table(ts, ns_path, version="2.6", store_schema=False)
+    try:
+        spark.conf.set(conf, "false")
+        load_table(spark, sf_dir, "lineitem")
+        spark.conf.set(conf, "true")
+        assert jobs_launched(lambda: load_table(spark, sf_dir, "lineitem")) == []
+        assert isinstance(read_parquet(spark, ns_path).schema["ts"].dataType, LongType)
+        spark.conf.set(conf, "false")
+        with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+            read_parquet(spark, ns_path)
     finally:
         if original is None:
             spark.conf.unset(conf)
