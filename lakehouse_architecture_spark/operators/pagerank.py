@@ -49,7 +49,9 @@ from pyspark.sql import functions as F
 from lakehouse_architecture_spark.operators.iterative import (
     BROADCAST_CAP,
     Fixpoint,
+    _free_local_checkpoint,
     fixpoint,
+    loop_round,
 )
 
 
@@ -236,13 +238,20 @@ def personalized_pagerank(
     # loop's left join, and a seed absent from the graph would
     # silently shrink total teleport mass below 1 while still counting
     # toward n_seeds. Dedup, then keep only seeds that are actual graph
-    # nodes, and recompute n_seeds from that set.
-    seed_set = seeds.select("node").distinct().join(nodes, "node", "semi")
-    n_seeds = seed_set.count()
-    if n_seeds < 1:
-        e.unpersist(blocking=False)
-        raise ValueError("seeds must be non-empty and present in the graph")
-    fp = _damped_rounds(e, nodes, damping, iters, checkpoint_dir, seed_set, n_seeds)
+    # nodes, and recompute n_seeds from that set. The set is materialised
+    # once, n_seeds observed on that action, and round 0 reads it.
+    seed_set, row = loop_round(
+        seeds.select("node").distinct().join(nodes, "node", "semi"),
+        metrics=[F.count(F.lit(1)).alias("n_seeds")],
+    )
+    n_seeds = row["n_seeds"]
+    try:
+        if n_seeds < 1:
+            e.unpersist(blocking=False)
+            raise ValueError("seeds must be non-empty and present in the graph")
+        fp = _damped_rounds(e, nodes, damping, iters, checkpoint_dir, seed_set, n_seeds)
+    finally:
+        _free_local_checkpoint(seed_set)
     return {**_result(fp, "sv"), "n_seeds": n_seeds}
 
 

@@ -14,6 +14,9 @@ and adds settings that matter for determinism and scale:
   listed on the driver: Spark's parallel partition discovery would launch
   a listing job on every read of a table past 32 directories, and in
   local mode that job only runs on the driver's own cores.
+- Spark's cache of compiled generated classes holds the engine's whole
+  working set (``spark.sql.codegen.cache.maxEntries``), so an op that
+  repeats a plan reuses its classes instead of recompiling them.
 """
 
 from __future__ import annotations
@@ -66,6 +69,18 @@ DEFAULT_CONF: dict[str, str] = {
     # and its JVM stack are unchanged. PySpark reads this once per
     # process, from the first session that asks.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Compiled whole-stage and expression classes live in one LRU cache per
+    # JVM, 100 entries by default. An LRU over a cyclic access pattern
+    # larger than its capacity misses on every lookup, and one warm op
+    # needs more than 100 classes (perfbench seed 1, local[2]): at 100 a
+    # registry_queries pass recompiles ~155 classes every pass, a
+    # daily_ingest cycle ~136 and the 25-query headline ~340 (348
+    # distinct), with Janino at ~10 ms a class: 1.3-1.6 s of a ~5 s op.
+    # 1000 is ~3x the largest set, room for the headline plus a daily
+    # cycle in one session. Three headline passes leave Metaspace at
+    # 169 MB (173 MB at 100). A static conf: it takes effect only when
+    # the JVM starts.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

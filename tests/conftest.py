@@ -64,3 +64,20 @@ def jobs_launched(spark):
         return out
 
     return run
+
+
+@pytest.fixture
+def classes_compiled(spark):
+    """``classes_compiled(fn)``: how many generated classes Spark compiles
+    while ``fn`` runs, read from the JVM's ``CodegenMetrics`` counter.
+    A class found in the codegen cache costs nothing; one compiled anew
+    counts once per class loader that asks for it (the driver's and the
+    tasks'). Reading the counter launches no Spark job."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run(fn) -> int:
+        before = compiles.getCount()
+        fn()
+        return compiles.getCount() - before
+
+    return run

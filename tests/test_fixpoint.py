@@ -70,6 +70,15 @@ def test_a_round_costs_three_jobs(spark, jobs_launched, op):
     assert jobs[3] - jobs[2] == 3, jobs
 
 
+@pytest.mark.parametrize("op, fixed", [("pagerank", 8), ("personalized_pagerank", 12)])
+def test_pagerank_fixed_jobs(spark, jobs_launched, op, fixed):
+    """jobs(2 rounds) - 2 rounds x 3: the jobs a run pays once. The
+    seeded variant adds the jobs of the seed set's one checkpoint, which
+    observes n_seeds and which round 0 reads."""
+    path = _edges(spark, PATH)
+    assert len(jobs_launched(lambda: _ROUNDS[op](path, 2))) - 2 * 3 == fixed
+
+
 # --- both sides of the broadcast cap -----------------------------------------
 
 
